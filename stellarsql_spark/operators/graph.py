@@ -36,7 +36,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stellarsql_spark.catalog import load_table
+from stellarsql_spark.artifacts import ensure, warehouse_path
+from stellarsql_spark.catalog import content_fingerprint, load_table, table_path
 from stellarsql_spark.registry import register
 
 # Shared oracle prefix: incidence → deduped undirected edge list (u < v).
@@ -1640,27 +1641,7 @@ def ensure_edge_fold(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (once per corpus fingerprint) the three-batch edge
     fold; returns the artifact root.  Serialized + markered like every
     layout artifact (the C273 ensure's protocol)."""
-    from urllib.parse import urlparse
-
-    from stellarsql_spark.catalog import content_fingerprint, table_path
-    from stellarsql_spark.sources.events_layout import (
-        _build_serialized,
-        _marker_ok,
-        _published_ok,
-    )
-
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    root = os.path.join(warehouse, f"graph_edge_fold_{tag}")
-    marker = os.path.join(root, "_EDGEFOLD_DONE")
-    fp = content_fingerprint(table_path(sf_dir, "events"))
-    published = tuple(
-        os.path.join(root, f"{kind}_b{b}")
-        for b in range(3)
-        for kind in ("memb", "edges")
-    )
-    if _marker_ok(marker, fp) and _published_ok(published):
-        return root
+    root = warehouse_path(spark, "graph_edge_fold", sf_dir)
 
     def _build() -> None:
         ev = load_table(spark, sf_dir, "events").select(
@@ -1732,7 +1713,12 @@ def ensure_edge_fold(spark: SparkSession, sf_dir: str) -> str:
                 os.path.join(root, f"memb_b{b}")
             )
 
-    _build_serialized(root, marker, fp, _build, published=published)
+    ensure(root, "_EDGEFOLD_DONE", content_fingerprint(table_path(sf_dir, "events")),
+           _build, published=(
+               os.path.join(root, f"{kind}_b{b}")
+               for b in range(3)
+               for kind in ("memb", "edges")
+           ))
     return root
 
 

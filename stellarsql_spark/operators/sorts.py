@@ -114,7 +114,7 @@ _PK_MASK = (1 << 34) - 1
 #   the bytes/128 MiB partition rule keeps bounded at any scale)
 #   measured −26.6% at 300× (4.68 → 3.44 s, min-of-7 paired, spreads
 #   ~0.9) and flat at 1000× (+1.6%, inside a contended run's noise) —
-#   tools/opt_ab_r15.py --tier topk300/topk1000.
+#   recorded in OPTIMIZATION_r15.md §topk.
 TOPK_SHJ_BYTES = 10 << 20
 
 
@@ -188,8 +188,7 @@ def b_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     (b_win_*) remains the fallback.
 
     Two r14-optimization choices, A/B'd at the 300× tier
-    (tools/opt_ab_r14.py --tier topk300, min-of-5 paired; base
-    5.95 s):
+    (OPTIMIZATION_r14.md §topk, min-of-5 paired; base 5.95 s):
     - the list element is ONE packed bigint instead of
       struct(double, long) — see _PK_MASK's block comment for the
       encoding and its bounds.  Halves the element payload crossing

@@ -162,10 +162,10 @@ def a_ddl_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # directory survives — remove it or CREATE fails on the location
     import os
     import shutil
-    from urllib.parse import urlparse
 
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    stale = os.path.join(warehouse, "stellar_ddl.db", "accounts")
+    from stellarsql_spark.artifacts import warehouse_dir
+
+    stale = os.path.join(warehouse_dir(spark), "stellar_ddl.db", "accounts")
     if os.path.exists(stale):
         shutil.rmtree(stale)
     spark.sql(

@@ -41,8 +41,9 @@ LIMIT 10
 # decision stat is the lineitem table's on-disk parquet bytes — a
 # corpus property (driver-side getsize sum, no Spark job), pinned
 # like DEDUP_BLOOM_CROSSOVER so the verdict never depends on session
-# state.  Measured decision table (tools/opt_ab_r14/r15, interleaved
-# min-of-N, result equality asserted first):
+# state.  Measured decision table (OPTIMIZATION_r14.md and
+# OPTIMIZATION_r15.md §q3, interleaved min-of-N, result equality
+# asserted first):
 # - 11 MiB (sf0.1): eager pre-agg LOSES ~45% (the extra l_orderkey
 #   exchange is pure fixed cost when the filtered lineitem side is
 #   already tiny) → 'base';

@@ -21,7 +21,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stellarsql_spark.catalog import load_table
+from stellarsql_spark.artifacts import ensure, ensure_bucketed_table, warehouse_path
+from stellarsql_spark.catalog import content_fingerprint, load_table, table_path
 from stellarsql_spark.registry import register
 
 _B50_ORACLE = """
@@ -664,32 +665,7 @@ def ensure_dedup_hashset(spark: SparkSession, sf_dir: str) -> str:
     and ``<root>/hashset_b{b}/`` the standing hash set AFTER folding
     batch b in.  Serialized + markered like the serving rollups.
     Returns the artifact root directory."""
-    from urllib.parse import urlparse
-
-    from stellarsql_spark.catalog import table_path
-    from stellarsql_spark.sources.events_layout import (
-        _build_serialized,
-        _marker_ok,
-        _published_ok,
-    )
-
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    root = os.path.join(warehouse, f"dedup_fold_{tag}")
-    marker = os.path.join(root, "_FOLD_DONE")
-    from stellarsql_spark.catalog import content_fingerprint
-
-    fp = content_fingerprint(table_path(sf_dir, "documents"))
-    # The marker vouches for all six published directories; verify
-    # each (not just the root) so a surv_b*/hashset_b* deleted
-    # independently of the marker triggers a rebuild (r12 ADVICE).
-    published = tuple(
-        os.path.join(root, f"{kind}_b{b}")
-        for b in range(3)
-        for kind in ("surv", "hashset")
-    )
-    if _marker_ok(marker, fp) and _published_ok(published):
-        return root
+    root = warehouse_path(spark, "dedup_fold", sf_dir)
 
     def _build() -> None:
         d = load_table(spark, sf_dir, "documents").select(
@@ -739,7 +715,14 @@ def ensure_dedup_hashset(spark: SparkSession, sf_dir: str) -> str:
                 os.path.join(root, f"hashset_b{b}")
             )
 
-    _build_serialized(root, marker, fp, _build, published=published)
+    # the marker vouches for all six published directories, so one
+    # deleted independently of it triggers a rebuild (r12 ADVICE)
+    ensure(root, "_FOLD_DONE", content_fingerprint(table_path(sf_dir, "documents")),
+           _build, published=(
+               os.path.join(root, f"{kind}_b{b}")
+               for b in range(3)
+               for kind in ("surv", "hashset")
+           ))
     return root
 
 
@@ -770,54 +753,17 @@ def ensure_standing_hashset_bucketed(spark: SparkSession, sf_dir: str) -> str:
 
     Same serialized fingerprint-marker protocol + metadata-only
     re-registration as every bucketed layout (r12 ADVICE)."""
-    from urllib.parse import urlparse
-
-    from stellarsql_spark.catalog import content_fingerprint, table_path
-    from stellarsql_spark.sources.bucketed import _recreate_over_location
-    from stellarsql_spark.sources.events_layout import _build_serialized, _marker_ok
-
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    name = f"dedup_hashset_bk_{tag}"
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    loc = os.path.join(warehouse, name)
-    marker = os.path.join(loc, "_BUCKETS_DONE")
-    fp = (
-        f"hs1:{content_fingerprint(table_path(sf_dir, 'documents'))}"
-        f":{N_HASHSET_BUCKETS}"
-    )
     standing = (
         load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % 3 != 0)
         .select(F.md5(F.lower(F.trim(F.col("text")))).alias("text_hash"))
         .distinct()
     )
-    if not _marker_ok(marker, fp):
-
-        def _build() -> None:
-            import shutil
-
-            if spark.catalog.tableExists(name):
-                spark.sql(f"DROP TABLE {name}")
-            shutil.rmtree(loc, ignore_errors=True)
-            # repartition by the bucket key first → ONE file per bucket
-            # (same Murmur3 assignment) — the only layout where Spark
-            # trusts the per-bucket sortBy order at read time, so the
-            # anti-join SMJ skips the standing-side sort too.
-            (
-                standing.repartition(N_HASHSET_BUCKETS, F.col("text_hash"))
-                .write.bucketBy(N_HASHSET_BUCKETS, "text_hash")
-                .sortBy("text_hash")
-                .mode("overwrite")
-                .saveAsTable(name)
-            )
-
-        _build_serialized(loc, marker, fp, _build)
-    if not spark.catalog.tableExists(name):
-        _recreate_over_location(
-            spark, name, standing, "text_hash", N_HASHSET_BUCKETS, loc,
-            sorted_by="text_hash",
-        )
-    return name
+    return ensure_bucketed_table(
+        spark, "dedup_hashset_bk", sf_dir, standing, "text_hash", N_HASHSET_BUCKETS,
+        f"hs1:{content_fingerprint(table_path(sf_dir, 'documents'))}:{N_HASHSET_BUCKETS}",
+        sorted_by="text_hash",
+    )
 
 
 @register("b_llm_dedup_incremental_bucketed", oracle=_INCR_DEDUP_ORACLE,

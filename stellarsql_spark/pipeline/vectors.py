@@ -17,12 +17,11 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from stellarsql_spark.catalog import load_table
+from stellarsql_spark.artifacts import ensure, warehouse_path
+from stellarsql_spark.catalog import content_fingerprint, load_table, table_path
 from stellarsql_spark.pipeline.similarity import (
     _EMBDUP_ORACLE,
     COSINE_NEARDUP_THRESHOLD,
@@ -1282,26 +1281,8 @@ def ensure_pq_codes(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     payload) and ``<warehouse>/pq_codebook_<tag>/`` (M_SUB×K_CODE
     centroid subvectors).  Same fingerprint-marker + exclusive-lock
     protocol as the other serving artifacts."""
-    from urllib.parse import urlparse
-
-    from stellarsql_spark.catalog import content_fingerprint, table_path
-    from stellarsql_spark.sources.events_layout import _build_serialized, _marker_ok
-
-    from stellarsql_spark.sources.events_layout import _published_ok
-
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    codes_dir = os.path.join(warehouse, f"pq_codes_{tag}")
-    cb_dir = os.path.join(warehouse, f"pq_codebook_{tag}")
-    marker = os.path.join(codes_dir, "_PQ_DONE")
-    fp = content_fingerprint(table_path(sf_dir, "embeddings"))
-    # The marker lives in codes_dir but vouches for BOTH published
-    # directories — the fast path must verify the companion codebook
-    # too, or a cb_dir deleted independently of the marker would serve
-    # a missing artifact (r12 ADVICE).
-    published = (codes_dir, cb_dir)
-    if _marker_ok(marker, fp) and _published_ok(published):
-        return codes_dir, cb_dir
+    codes_dir = warehouse_path(spark, "pq_codes", sf_dir)
+    cb_dir = warehouse_path(spark, "pq_codebook", sf_dir)
 
     def _build() -> None:
         q = _int8_grid(load_table(spark, sf_dir, "embeddings"))
@@ -1314,7 +1295,10 @@ def ensure_pq_codes(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         code_book.write.mode("overwrite").parquet(cb_dir)
         assign.write.mode("overwrite").parquet(codes_dir)
 
-    _build_serialized(codes_dir, marker, fp, _build, published=published)
+    # the marker lives in codes_dir but vouches for the codebook too
+    # (r12 ADVICE)
+    ensure(codes_dir, "_PQ_DONE", content_fingerprint(table_path(sf_dir, "embeddings")),
+           _build, published=(codes_dir, cb_dir))
     return codes_dir, cb_dir
 
 
@@ -2032,25 +2016,9 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]
     Same fingerprint-marker + exclusive-lock + published-set protocol
     as every serving artifact; returns (cents_dir, codes_dir, cb_dir).
     """
-    from urllib.parse import urlparse
-
-    from stellarsql_spark.catalog import content_fingerprint, table_path
-    from stellarsql_spark.sources.events_layout import (
-        _build_serialized,
-        _marker_ok,
-        _published_ok,
-    )
-
     pq_codes_dir, cb_dir = ensure_pq_codes(spark, sf_dir)
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    cents_dir = os.path.join(warehouse, f"ivfpq_cents_{tag}")
-    codes_dir = os.path.join(warehouse, f"ivfpq_codes_{tag}")
-    marker = os.path.join(codes_dir, "_IVFPQ_DONE")
-    fp = content_fingerprint(table_path(sf_dir, "embeddings"))
-    published = (cents_dir, codes_dir)
-    if _marker_ok(marker, fp) and _published_ok(published):
-        return cents_dir, codes_dir, cb_dir
+    cents_dir = warehouse_path(spark, "ivfpq_cents", sf_dir)
+    codes_dir = warehouse_path(spark, "ivfpq_codes", sf_dir)
 
     def _build() -> None:
         q = _int8_grid(load_table(spark, sf_dir, "embeddings"))
@@ -2069,7 +2037,8 @@ def ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]
             .parquet(codes_dir)
         )
 
-    _build_serialized(codes_dir, marker, fp, _build, published=published)
+    ensure(codes_dir, "_IVFPQ_DONE", content_fingerprint(table_path(sf_dir, "embeddings")),
+           _build, published=(cents_dir, codes_dir))
     return cents_dir, codes_dir, cb_dir
 
 
@@ -2172,25 +2141,9 @@ def ensure_ivfpq_residual_index(
         lists).
 
     Returns (cents_dir, codes_dir, codebook_dir)."""
-    from urllib.parse import urlparse
-
-    from stellarsql_spark.catalog import content_fingerprint, table_path
-    from stellarsql_spark.sources.events_layout import (
-        _build_serialized,
-        _marker_ok,
-        _published_ok,
-    )
-
     cents_dir, _, _ = ensure_ivfpq_index(spark, sf_dir)
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    rcb_dir = os.path.join(warehouse, f"ivfpqr_codebook_{tag}")
-    rcodes_dir = os.path.join(warehouse, f"ivfpqr_codes_{tag}")
-    marker = os.path.join(rcodes_dir, "_IVFPQR_DONE")
-    fp = content_fingerprint(table_path(sf_dir, "embeddings"))
-    published = (rcb_dir, rcodes_dir)
-    if _marker_ok(marker, fp) and _published_ok(published):
-        return cents_dir, rcodes_dir, rcb_dir
+    rcb_dir = warehouse_path(spark, "ivfpqr_codebook", sf_dir)
+    rcodes_dir = warehouse_path(spark, "ivfpqr_codes", sf_dir)
 
     def _build() -> None:
         q = _int8_grid(load_table(spark, sf_dir, "embeddings"))
@@ -2212,7 +2165,8 @@ def ensure_ivfpq_residual_index(
             .parquet(rcodes_dir)
         )
 
-    _build_serialized(rcodes_dir, marker, fp, _build, published=published)
+    ensure(rcodes_dir, "_IVFPQR_DONE", content_fingerprint(table_path(sf_dir, "embeddings")),
+           _build, published=(rcb_dir, rcodes_dir))
     return cents_dir, rcodes_dir, rcb_dir
 
 

@@ -18,10 +18,13 @@ them.
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stellarsql_spark.artifacts import ensure
 from stellarsql_spark.catalog import TABLES, load_table, table_path
 
 # Key stride between replicas — larger than any key in the corpora
@@ -119,6 +122,62 @@ def replicate_table(df: DataFrame, name: str, factor: int) -> DataFrame:
     return out.drop("_replica")
 
 
+def _ensure_corpus(
+    spark: SparkSession,
+    base_sf_dir: str,
+    factor: int,
+    out_root: str | None,
+    replicated: tuple[str, ...] | None,
+    suffix: str,
+    variant: str = "",
+    replicate: Callable[[DataFrame, str, int], DataFrame] = replicate_table,
+) -> str:
+    """The per-table loop every corpus builder shares: build (or reuse)
+    ``<out_root>/<base tag><suffix>/`` (``out_root`` defaults to
+    ``<repo>/.scale``), writing every base table through
+    ``replicate(base, table, table_factor)`` — ``factor`` for the
+    ``replicated`` tables (all when None), 1 for the others.
+    ``variant`` extends the fingerprint with the builder's own knobs."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tag = os.path.basename(base_sf_dir.rstrip("/"))
+    out_dir = os.path.join(out_root or os.path.join(repo, ".scale"), f"{tag}{suffix}")
+    paths = {t: os.path.join(out_dir, f"{t}.parquet") for t in TABLES}
+
+    def _build() -> None:
+        shutil.rmtree(out_dir, ignore_errors=True)
+        os.makedirs(out_dir, exist_ok=True)
+        for t in TABLES:
+            t_factor = factor if (replicated is None or t in replicated) else 1
+            # One file per ~32 MiB of estimated DECODED output (Arrow
+            # bytes — see _est_scan_bytes), like a real lake's many-file
+            # layout. This is a measured fix (round 6, re-fixed in round
+            # 8 when compressed-bytes sizing resurfaced on text): the
+            # single-file writer produced orders@300× as ONE 500 MiB file
+            # with FOUR 12M-row row groups, capping Spark's scan at 4-way
+            # parallelism on 32 cores (b_join_inner 3.8 s; DuckDB, which
+            # parallelizes inside a row group, was unaffected). File-level
+            # parallelism is the layout knob a 100 TB lake actually has —
+            # maxPartitionBytes can't split below row-group granularity.
+            est_bytes = _est_scan_bytes(table_path(base_sf_dir, t)) * t_factor
+            n_files = int(max(1, min(512, est_bytes // (32 << 20))))
+            base = load_table(spark, base_sf_dir, t)
+            if n_files > 1:
+                # Parallelize the EXPLOSION, not its output: repartition
+                # the small base table into n_files slices BEFORE the
+                # replica cross-join, so each task independently explodes
+                # and writes its slice ×factor — the only shuffle is the
+                # megabyte-sized base table (a post-explosion repartition
+                # would funnel the full factor× volume through one
+                # single-task shuffle write: measured 16+ min for
+                # lineitem@300× vs ~2 min this way).
+                base = base.repartition(n_files)
+            replicate(base, t, t_factor).write.mode("overwrite").parquet(paths[t])
+
+    fingerprint = _base_fingerprint(base_sf_dir, factor, replicated) + variant
+    ensure(out_dir, "_SCALED_DONE", fingerprint, _build, published=paths.values())
+    return out_dir
+
+
 def ensure_scaled_corpus(
     spark: SparkSession,
     base_sf_dir: str,
@@ -132,51 +191,8 @@ def ensure_scaled_corpus(
     still copied at base size so every view registers) — the 1000×
     tier replicates only the five tables its probe queries touch,
     which keeps the one-off build at ~14 GiB instead of ~60 GiB."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    tag = os.path.basename(base_sf_dir.rstrip("/"))
     suffix = f"_x{factor}" if tables is None else f"_x{factor}p{len(tables)}"
-    out_dir = os.path.join(out_root or os.path.join(repo, ".scale"), f"{tag}{suffix}")
-    marker = os.path.join(out_dir, "_SCALED_DONE")
-    fingerprint = _base_fingerprint(base_sf_dir, factor, tables)
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read() == fingerprint:
-                return out_dir
-    import shutil
-
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
-    for t in TABLES:
-        t_factor = factor if (tables is None or t in tables) else 1
-        scaled = replicate_table(load_table(spark, base_sf_dir, t), t, t_factor)
-        # One file per ~32 MiB of estimated DECODED output (Arrow
-        # bytes — see _est_scan_bytes), like a real lake's many-file
-        # layout. This is a measured fix (round 6, re-fixed in round
-        # 8 when compressed-bytes sizing resurfaced on text): the
-        # single-file writer produced orders@300× as ONE 500 MiB file
-        # with FOUR 12M-row row groups, capping Spark's scan at 4-way
-        # parallelism on 32 cores (b_join_inner 3.8 s; DuckDB, which
-        # parallelizes inside a row group, was unaffected). File-level
-        # parallelism is the layout knob a 100 TB lake actually has —
-        # maxPartitionBytes can't split below row-group granularity.
-        est_bytes = _est_scan_bytes(table_path(base_sf_dir, t)) * t_factor
-        n_files = int(max(1, min(512, est_bytes // (32 << 20))))
-        if n_files > 1:
-            # Parallelize the EXPLOSION, not its output: repartition
-            # the small base table into n_files slices BEFORE the
-            # replica cross-join, so each task independently explodes
-            # and writes its slice ×factor — the only shuffle is the
-            # megabyte-sized base table (a post-explosion repartition
-            # would funnel the full factor× volume through one
-            # single-task shuffle write: measured 16+ min for
-            # lineitem@300× vs ~2 min this way).
-            scaled = replicate_table(
-                load_table(spark, base_sf_dir, t).repartition(n_files), t, t_factor
-            )
-        scaled.write.mode("overwrite").parquet(os.path.join(out_dir, f"{t}.parquet"))
-    with open(marker, "w") as f:
-        f.write(fingerprint)
-    return out_dir
+    return _ensure_corpus(spark, base_sf_dir, factor, out_root, tables, suffix)
 
 
 # --- zipfian-skew corpus (r8): real join-key skew at depth ----------
@@ -220,52 +236,32 @@ def ensure_skewed_corpus(
     (xxhash64 draw — no RNG stream, rebuilds are identical).
     Referential integrity holds: hot keys are existing replica-0
     orderkeys, cold rows keep their original key."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    tag = os.path.basename(base_sf_dir.rstrip("/"))
-    out_dir = os.path.join(out_root or os.path.join(repo, ".scale"), f"{tag}_x{factor}z")
-    marker = os.path.join(out_dir, "_SCALED_DONE")
-    fingerprint = (
-        _base_fingerprint(base_sf_dir, factor, ("orders", "lineitem"))
-        + f"|zipf:{ZIPF_HOT_KEYS}:{ZIPF_HOT_SHARE}"
-    )
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read() == fingerprint:
-                return out_dir
-    import shutil
+    def replicate(df: DataFrame, t: str, t_factor: int) -> DataFrame:
+        scaled = replicate_table(df, t, t_factor)
+        if t != "lineitem":
+            return scaled
+        hot = [
+            r[0]
+            for r in load_table(spark, base_sf_dir, "orders")
+            .select("o_orderkey")
+            .orderBy("o_orderkey")
+            .limit(ZIPF_HOT_KEYS)
+            .collect()
+        ]
+        thresholds = _zipf_thresholds()
+        u = F.pmod(
+            F.xxhash64("l_orderkey", "l_linenumber", "l_partkey"),
+            F.lit(_ZIPF_RES),
+        )
+        remap = F.col("l_orderkey")
+        for j in range(ZIPF_HOT_KEYS - 1, -1, -1):
+            remap = F.when(u < thresholds[j], F.lit(hot[j])).otherwise(remap)
+        return scaled.withColumn("l_orderkey", remap)
 
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
-    hot = [
-        r[0]
-        for r in load_table(spark, base_sf_dir, "orders")
-        .select("o_orderkey")
-        .orderBy("o_orderkey")
-        .limit(ZIPF_HOT_KEYS)
-        .collect()
-    ]
-    thresholds = _zipf_thresholds()
-    for t in TABLES:
-        t_factor = factor if t in ("orders", "lineitem") else 1
-        est_bytes = _est_scan_bytes(table_path(base_sf_dir, t)) * t_factor
-        n_files = int(max(1, min(512, est_bytes // (32 << 20))))
-        base = load_table(spark, base_sf_dir, t)
-        if n_files > 1:
-            base = base.repartition(n_files)
-        scaled = replicate_table(base, t, t_factor)
-        if t == "lineitem":
-            u = F.pmod(
-                F.xxhash64("l_orderkey", "l_linenumber", "l_partkey"),
-                F.lit(_ZIPF_RES),
-            )
-            remap = F.col("l_orderkey")
-            for j in range(ZIPF_HOT_KEYS - 1, -1, -1):
-                remap = F.when(u < thresholds[j], F.lit(hot[j])).otherwise(remap)
-            scaled = scaled.withColumn("l_orderkey", remap)
-        scaled.write.mode("overwrite").parquet(os.path.join(out_dir, f"{t}.parquet"))
-    with open(marker, "w") as f:
-        f.write(fingerprint)
-    return out_dir
+    return _ensure_corpus(
+        spark, base_sf_dir, factor, out_root, ("orders", "lineitem"), f"_x{factor}z",
+        f"|zipf:{ZIPF_HOT_KEYS}:{ZIPF_HOT_SHARE}", replicate,
+    )
 
 
 # --- time-shifted graph corpus (r12 VERDICT #2): depth for the graph tier ----
@@ -294,52 +290,30 @@ def ensure_graph_corpus(
     """Build (or reuse) the ``factor``× TIME-SHIFTED events corpus for
     the graph depth tier; other tables are copied at base size so
     every view still registers."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    tag = os.path.basename(base_sf_dir.rstrip("/"))
-    out_dir = os.path.join(out_root or os.path.join(repo, ".scale"), f"{tag}_x{factor}g")
-    marker = os.path.join(out_dir, "_SCALED_DONE")
+    def replicate(df: DataFrame, t: str, t_factor: int) -> DataFrame:
+        if t != "events" or t_factor <= 1:
+            return replicate_table(df, t, t_factor)
+        replicas = spark.range(t_factor).select(F.col("id").alias("_replica"))
+        return (
+            df.crossJoin(F.broadcast(replicas))
+            .withColumn("event_id", F.col("event_id") + F.col("_replica") * F.lit(STRIDE))
+            .withColumn("user_id", F.col("user_id") + F.col("_replica") * F.lit(STRIDE))
+            .withColumn(
+                "ts",
+                F.timestamp_micros(
+                    F.unix_micros("ts")
+                    + F.col("_replica") * F.lit(TS_STRIDE_DAYS * 86_400_000_000)
+                ),
+            )
+            .drop("_replica")
+        )
+
     # The ("events",) argument only tags WHICH table replicates; the
     # size+mtime segments inside _base_fingerprint always cover EVERY
     # base table (its `for t in TABLES` loop), so regenerating any
     # copied table — not just events — invalidates this corpus
     # (r13 ADVICE adjudication: the concern was already covered).
-    fingerprint = (
-        _base_fingerprint(base_sf_dir, factor, ("events",))
-        + f"|graph:{TS_STRIDE_DAYS}"
+    return _ensure_corpus(
+        spark, base_sf_dir, factor, out_root, ("events",), f"_x{factor}g",
+        f"|graph:{TS_STRIDE_DAYS}", replicate,
     )
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read() == fingerprint:
-                return out_dir
-    import shutil
-
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
-    for t in TABLES:
-        t_factor = factor if t == "events" else 1
-        est_bytes = _est_scan_bytes(table_path(base_sf_dir, t)) * t_factor
-        n_files = int(max(1, min(512, est_bytes // (32 << 20))))
-        base = load_table(spark, base_sf_dir, t)
-        if n_files > 1:
-            base = base.repartition(n_files)
-        if t == "events" and t_factor > 1:
-            replicas = spark.range(t_factor).select(F.col("id").alias("_replica"))
-            scaled = (
-                base.crossJoin(F.broadcast(replicas))
-                .withColumn("event_id", F.col("event_id") + F.col("_replica") * F.lit(STRIDE))
-                .withColumn("user_id", F.col("user_id") + F.col("_replica") * F.lit(STRIDE))
-                .withColumn(
-                    "ts",
-                    F.timestamp_micros(
-                        F.unix_micros("ts")
-                        + F.col("_replica") * F.lit(TS_STRIDE_DAYS * 86_400_000_000)
-                    ),
-                )
-                .drop("_replica")
-            )
-        else:
-            scaled = replicate_table(base, t, t_factor)
-        scaled.write.mode("overwrite").parquet(os.path.join(out_dir, f"{t}.parquet"))
-    with open(marker, "w") as f:
-        f.write(fingerprint)
-    return out_dir

@@ -10,12 +10,11 @@ area).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stellarsql_spark.catalog import load_table, table_path
+from stellarsql_spark.artifacts import ensure, ensure_bucketed_table, warehouse_path
+from stellarsql_spark.catalog import content_fingerprint, load_table, table_path
 from stellarsql_spark.functions.exact import cents, sql_csum, sql_dsum
 from stellarsql_spark.registry import register
 
@@ -52,72 +51,19 @@ def write_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     on every call and a marker-valid directory is re-registered
     metadata-only across sessions instead of rewritten.
     """
-    names: dict[str, str] = {}
-    # repartition by the bucket key first → ONE file per bucket (same
-    # Murmur3 assignment), which both avoids the tiny-files layout and
-    # is the only layout where Spark trusts the per-bucket sortBy
-    # order at read time (many files per bucket forces a re-sort).
-    for t, key, suffix in (
-        ("orders", "o_orderkey", "b"),
-        ("lineitem", "l_orderkey", "b"),
-    ):
-        names[t] = _ensure_bucketed_table(
-            spark, sf_dir, t, key, N_BUCKETS, suffix, sorted_by=key
-        )
-    return names["orders"], names["lineitem"]
+    return tuple(
+        _bucketed(spark, sf_dir, t, key, N_BUCKETS, "b", sorted_by=key)
+        for t, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey"))
+    )
 
 
-def _ensure_bucketed_table(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    key: str,
-    n_buckets: int,
-    suffix: str,
-    sorted_by: str | None = None,
-) -> str:
-    """Shared idempotent bucketed-table builder: fingerprint-marker
-    fast path, build serialized across sessions via the events-layout
-    flock protocol (r12 ADVICE — the inline saveAsTable+marker pair
-    could interleave with another session's, publishing a valid-
-    looking marker over a torn bucket directory), and metadata-only
-    re-registration when the files are valid but this session's
-    catalog has no entry."""
-    import shutil
-    from urllib.parse import urlparse
-
-    from stellarsql_spark.sources.events_layout import _build_serialized, _marker_ok
-
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    name = f"{table}_{suffix}_{tag}"
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    loc = os.path.join(warehouse, name)
-    marker = os.path.join(loc, "_BUCKETS_DONE")
-    fp = _bucket_fingerprint(table_path(sf_dir, table), n_buckets)
-    df = load_table(spark, sf_dir, table)
-    if not _marker_ok(marker, fp):
-        # Catalog hit is NOT sufficient: if the base corpus at sf_dir
-        # was regenerated mid-session the catalog would keep serving
-        # buckets built from the old data, so the on-disk fingerprint
-        # is checked on every call (r8 ADVICE).
-        def _build() -> None:
-            if spark.catalog.tableExists(name):
-                spark.sql(f"DROP TABLE {name}")
-            shutil.rmtree(loc, ignore_errors=True)
-            w = df.repartition(n_buckets, F.col(key)).write.bucketBy(n_buckets, key)
-            if sorted_by:
-                w = w.sortBy(sorted_by)
-            w.mode("overwrite").saveAsTable(name)
-
-        _build_serialized(loc, marker, fp, _build)
-    if not spark.catalog.tableExists(name):
-        # Valid files on disk (we lost the build race, or a past
-        # session built them) but no entry in this session's
-        # in-memory catalog → metadata-only CREATE over the location.
-        _recreate_over_location(
-            spark, name, df, key, n_buckets, loc, sorted_by=sorted_by
-        )
-    return name
+def _bucketed(spark: SparkSession, sf_dir: str, table: str, key: str,
+              n_buckets: int, suffix: str, sorted_by: str | None = None) -> str:
+    return ensure_bucketed_table(
+        spark, f"{table}_{suffix}", sf_dir, load_table(spark, sf_dir, table), key,
+        n_buckets, _bucket_fingerprint(table_path(sf_dir, table), n_buckets),
+        sorted_by=sorted_by,
+    )
 
 
 def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -152,31 +98,10 @@ N_CK_BUCKETS = 32
 
 
 def _bucket_fingerprint(src: str, n_buckets: int) -> str:
-    from stellarsql_spark.catalog import content_fingerprint
-
     # "c1" = coarse-layout version tag (r11): bumping it invalidates
     # bucket directories written by the pre-r11 many-files-per-bucket
     # writer so they rebuild 1-file-per-bucket.
     return f"c1:{content_fingerprint(src)}:{n_buckets}"
-
-
-def _recreate_over_location(spark: SparkSession, name: str, df: DataFrame,
-                            key: str, n_buckets: int, location: str,
-                            sorted_by: str | None = None) -> None:
-    """Re-register an existing bucketed directory as a catalog table
-    WITHOUT rewriting the data. The in-memory catalog forgets tables
-    between sessions while the warehouse files persist; re-declaring
-    the same CLUSTERED BY (and SORTED BY, when the writer sortBy'd)
-    spec over the same files restores the bucket metadata — at a
-    GiB-scale corpus this turns a per-session multi-GiB rewrite into a
-    metadata-only CREATE."""
-    cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    sort_clause = f"SORTED BY ({sorted_by}) " if sorted_by else ""
-    spark.sql(
-        f"CREATE TABLE {name} ({cols}) USING PARQUET "
-        f"CLUSTERED BY ({key}) {sort_clause}INTO {n_buckets} BUCKETS "
-        f"LOCATION '{location}'"
-    )
 
 
 def ensure_custkey_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -185,7 +110,7 @@ def ensure_custkey_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]
     (sf_dir, corpus mtime); reuses on-disk buckets across sessions.
 
     Repartition BY THE BUCKET KEY before the bucketed write (inside
-    _ensure_bucketed_table): DataFrame hash partitioning and bucket-id
+    artifacts.ensure_bucketed_table): DataFrame hash partitioning and bucket-id
     assignment use the same Murmur3 hash mod N, so each writer task
     holds exactly one bucket's rows and emits ONE file — without it,
     every input partition writes a sliver of every bucket (measured at
@@ -194,12 +119,10 @@ def ensure_custkey_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]
     (engine-interleaved min-of-7): 1-file-per-bucket cut the headline
     bucketed join from 2.17× to 1.82× DuckDB.  At warehouse scale this
     is also the small-files rule every lake enforces at ingest."""
-    names: dict[str, str] = {}
-    for t, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
-        names[t] = _ensure_bucketed_table(
-            spark, sf_dir, t, key, N_CK_BUCKETS, "ck"
-        )
-    return names["orders"], names["customer"]
+    return tuple(
+        _bucketed(spark, sf_dir, t, key, N_CK_BUCKETS, "ck")
+        for t, key in (("orders", "o_custkey"), ("customer", "c_custkey"))
+    )
 
 
 @register("b_join_inner_bucketed", oracle=_INNER_BUCKETED_ORACLE,
@@ -278,31 +201,15 @@ def ensure_join_rollup(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     Builds are serialized/idempotent via the same fingerprint-marker +
     exclusive-lock protocol as the events layout (r8 ADVICE)."""
-    from urllib.parse import urlparse
-
-    from stellarsql_spark.sources.events_layout import (
-        _build_serialized,
-        _marker_ok,
-        _published_ok,
-    )
-
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    preagg_dir = os.path.join(warehouse, f"join_ck_preagg_{tag}")
-    rollup_dir = os.path.join(warehouse, f"join_nation_rollup_{tag}")
-    names_dir = os.path.join(warehouse, f"nation_names_{tag}")
-    marker = os.path.join(rollup_dir, "_ROLLUP_DONE")
+    preagg_dir = warehouse_path(spark, "join_ck_preagg", sf_dir)
+    rollup_dir = warehouse_path(spark, "join_nation_rollup", sf_dir)
+    names_dir = warehouse_path(spark, "nation_names", sf_dir)
     # the rollup depends on facts AND the dims that map/name keys —
     # fingerprint all four inputs so regenerating any one rebuilds it
     fp = ":".join(
         _bucket_fingerprint(table_path(sf_dir, t), 0)
         for t in ("orders", "customer", "nation", "region")
     )
-    # the marker lives in rollup_dir but vouches for all three
-    # published directories (r12 ADVICE)
-    published = (preagg_dir, rollup_dir, names_dir)
-    if _marker_ok(marker, fp) and _published_ok(published):
-        return rollup_dir, names_dir
 
     def _build() -> None:
         o = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
@@ -338,7 +245,8 @@ def ensure_join_rollup(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .parquet(names_dir)
         )
 
-    _build_serialized(rollup_dir, marker, fp, _build, published=published)
+    ensure(rollup_dir, "_ROLLUP_DONE", fp, _build,
+           published=(preagg_dir, rollup_dir, names_dir))
     return rollup_dir, names_dir
 
 
@@ -402,17 +310,7 @@ def ensure_pricing_rollup(spark: SparkSession, sf_dir: str) -> str:
 
     Build is serialized/idempotent via the same fingerprint-marker +
     exclusive-lock protocol as the other layout artifacts."""
-    from urllib.parse import urlparse
-
-    from stellarsql_spark.sources.events_layout import _build_serialized, _marker_ok
-
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    rollup_dir = os.path.join(warehouse, f"pricing_day_rollup_{tag}")
-    marker = os.path.join(rollup_dir, "_ROLLUP_DONE")
-    fp = _bucket_fingerprint(table_path(sf_dir, "lineitem"), 0)
-    if _marker_ok(marker, fp):
-        return rollup_dir
+    rollup_dir = warehouse_path(spark, "pricing_day_rollup", sf_dir)
 
     def _build() -> None:
         li = load_table(spark, sf_dir, "lineitem")
@@ -438,7 +336,8 @@ def ensure_pricing_rollup(spark: SparkSession, sf_dir: str) -> str:
             .parquet(rollup_dir)
         )
 
-    _build_serialized(rollup_dir, marker, fp, _build)
+    ensure(rollup_dir, "_ROLLUP_DONE",
+           _bucket_fingerprint(table_path(sf_dir, "lineitem"), 0), _build)
     return rollup_dir
 
 
@@ -556,15 +455,9 @@ def ensure_topk_rollup(spark: SparkSession, sf_dir: str) -> str:
     top3(merge(top3(A), top3(B))) == top3(A ∪ B) — new order batches
     fold in at ≤3 rows per touched customer (certified in
     tests/test_round11.py::TestTopkServed::test_merge_property)."""
-    from urllib.parse import urlparse
-
     from stellarsql_spark.operators.sorts import b_topk_per_group
-    from stellarsql_spark.sources.events_layout import _build_serialized, _marker_ok
 
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    out_dir = os.path.join(warehouse, f"topk3_custkey_{tag}")
-    marker = os.path.join(out_dir, "_ROLLUP_DONE")
+    out_dir = warehouse_path(spark, "topk3_custkey", sf_dir)
     # Builder-version token (r14 ADVICE): the fingerprint previously
     # covered only the corpus files, so an artifact materialized by an
     # OLDER builder implementation was silently reused after a kernel
@@ -574,13 +467,11 @@ def ensure_topk_rollup(spark: SparkSession, sf_dir: str) -> str:
     fp = "bld-r15:" + ":".join(
         _bucket_fingerprint(table_path(sf_dir, t), 0) for t in ("orders", "customer")
     )
-    if _marker_ok(marker, fp):
-        return out_dir
 
     def _build() -> None:
         b_topk_per_group(spark, sf_dir).write.mode("overwrite").parquet(out_dir)
 
-    _build_serialized(out_dir, marker, fp, _build)
+    ensure(out_dir, "_ROLLUP_DONE", fp, _build)
     return out_dir
 
 

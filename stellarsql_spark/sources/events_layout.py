@@ -39,74 +39,16 @@ as `b_join_inner_bucketed`.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from stellarsql_spark.catalog import load_table, table_path
+from stellarsql_spark.artifacts import ensure, warehouse_path
+from stellarsql_spark.catalog import content_fingerprint, load_table, table_path
 from stellarsql_spark.functions.exact import cents
 from stellarsql_spark.registry import register
 
 US_PER_HOUR = 3_600_000_000
 
-
-def _marker_ok(marker: str, fp: str) -> bool:
-    try:
-        with open(marker) as f:
-            return f.read() == fp
-    except OSError:
-        return False
-
-
-def _published_ok(dirs) -> bool:
-    """True iff every directory a build publishes still holds a
-    completed parquet write (its ``_SUCCESS`` file).  A marker-gated
-    fast path must verify the companion artifacts the marker vouches
-    for, not just the marker's own directory (r12 ADVICE): a companion
-    deleted independently would otherwise pass the marker check and
-    serve a missing directory."""
-    return all(os.path.exists(os.path.join(d, "_SUCCESS")) for d in dirs)
-
-
-def _build_serialized(target_dir: str, marker: str, fp: str, build,
-                      published=()) -> None:
-    """Run ``build()`` (an overwrite-write + marker publish) at most
-    once per fingerprint, serialized across sessions via an exclusive
-    lock file beside the target dir.
-
-    Without this, two sessions materializing the same corpus could
-    interleave their overwrite and marker writes, leaving a marker
-    that describes a partially-overwritten directory.  flock gives
-    single-host mutual exclusion (the sandbox and the bench/driver
-    sessions are single-host); on a real multi-writer lake this job
-    belongs to a transactional table format's commit protocol, not a
-    marker file.  Double-checked: the marker is re-read under the
-    lock so the loser of the race returns the winner's build.
-
-    Known TOCTOU (r13 ADVICE, accepted): callers' marker+published
-    fast paths run OUTSIDE this lock, so a reader could pass the
-    check just before a concurrent rebuild rmtrees a companion dir.
-    The protocol therefore assumes SINGLE-WRITER-per-fingerprint
-    operation — true here by construction, since a build for a given
-    fingerprint only ever happens when that fingerprint has no valid
-    marker yet (rebuilds are triggered by corpus regeneration, which
-    changes the fingerprint and the artifact path's content together,
-    never by overwriting a currently-valid artifact in place).
-    Hardening for a concurrent-invalidation world would take LOCK_SH
-    in the fast path; a real lake gets this from its table format's
-    snapshot isolation."""
-    import fcntl
-
-    lock_path = target_dir.rstrip("/") + ".lock"
-    os.makedirs(os.path.dirname(lock_path) or ".", exist_ok=True)
-    with open(lock_path, "w") as lk:
-        fcntl.flock(lk, fcntl.LOCK_EX)
-        if _marker_ok(marker, fp) and _published_ok(published):
-            return
-        build()
-        with open(marker, "w") as f:
-            f.write(fp)
 
 # Identical result contract to b_stream_tumbling
 # (streaming/windows.py) — the twin measures the layout, not a
@@ -122,8 +64,6 @@ GROUP BY 1, 2
 
 
 def _layout_fingerprint(src: str) -> str:
-    from stellarsql_spark.catalog import content_fingerprint
-
     # v2: day-dir layout (hour dirs A/B'd and rejected, see module doc).
     # content_fingerprint handles directory corpora correctly (sorted
     # member listing, not the directory inode — r10 ADVICE).
@@ -133,13 +73,13 @@ def _layout_fingerprint(src: str) -> str:
 def ensure_hour_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize (once per corpus) the hour-partitioned events lake:
 
-    ``<scratch>/events_hr_<tag>/``  facts, hive dirs ``event_day=N/``
+    ``<warehouse>/events_hr_<tag>/``  facts, hive dirs ``event_day=N/``
         (days since epoch), one file per day sorted by
         (event_hour, type_id); all source columns kept (ts included —
         the layout loses no information) with ``event_type`` replaced
         by ``type_id`` and ``event_hour`` (epoch-hour BIGINT) and
         ``cts`` (integer cents) added;
-    ``<scratch>/event_types_<tag>/``  the 5-row type dimension
+    ``<warehouse>/event_types_<tag>/``  the 5-row type dimension
         (``type_id``, ``event_type``), ids dense in name order so
         rebuilds are deterministic.
 
@@ -148,16 +88,8 @@ def ensure_hour_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     sf_dir is regenerated.  Plain ``spark.read.parquet`` discovers the
     hive partitions, so no catalog state is needed (unlike bucketing,
     which only the session catalog can carry)."""
-    from urllib.parse import urlparse
-
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    fact_dir = os.path.join(warehouse, f"events_hr_{tag}")
-    dim_dir = os.path.join(warehouse, f"event_types_{tag}")
-    marker = os.path.join(fact_dir, "_LAYOUT_DONE")
-    fp = _layout_fingerprint(table_path(sf_dir, "events"))
-    if _marker_ok(marker, fp):
-        return fact_dir, dim_dir
+    fact_dir = warehouse_path(spark, "events_hr", sf_dir)
+    dim_dir = warehouse_path(spark, "event_types", sf_dir)
 
     def _build() -> None:
         e = load_table(spark, sf_dir, "events")
@@ -195,7 +127,8 @@ def ensure_hour_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         )
         fact.write.mode("overwrite").partitionBy("event_day").parquet(fact_dir)
 
-    _build_serialized(fact_dir, marker, fp, _build)
+    ensure(fact_dir, "_LAYOUT_DONE", _layout_fingerprint(table_path(sf_dir, "events")),
+           _build, published=(fact_dir, dim_dir))
     return fact_dir, dim_dir
 
 
@@ -263,16 +196,8 @@ def ensure_hourly_rollup(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     rows.  This is the at-rest aggregate a streaming job maintains
     incrementally (b_ts_rollup_incremental's merge pattern /
     foreachBatch upsert); dashboards read THIS, not raw events."""
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/")).strip("_")
-    from urllib.parse import urlparse
-
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    rollup_dir = os.path.join(warehouse, f"events_hourly_{tag}")
-    marker = os.path.join(rollup_dir, "_ROLLUP_DONE")
-    fp = _layout_fingerprint(table_path(sf_dir, "events"))
+    rollup_dir = warehouse_path(spark, "events_hourly", sf_dir)
     fact_dir, dim_dir = ensure_hour_layout(spark, sf_dir)
-    if _marker_ok(marker, fp):
-        return rollup_dir, dim_dir
 
     def _build() -> None:
         (
@@ -287,7 +212,8 @@ def ensure_hourly_rollup(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .parquet(rollup_dir)
         )
 
-    _build_serialized(rollup_dir, marker, fp, _build)
+    ensure(rollup_dir, "_ROLLUP_DONE", _layout_fingerprint(table_path(sf_dir, "events")),
+           _build)
     return rollup_dir, dim_dir
 
 

@@ -229,6 +229,7 @@ def _three_file_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     a fingerprint of the source events.parquet (size + mtime), so a
     regenerated corpus at the same path invalidates the cached split
     instead of silently streaming stale data."""
+    from stellarsql_spark.artifacts import ensure
     from stellarsql_spark.catalog import table_path
     from stellarsql_spark.sources.io import SCRATCH_ROOT
 
@@ -236,36 +237,33 @@ def _three_file_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     fingerprint = f"{src_stat.st_size}:{src_stat.st_mtime_ns}"
     tag = sf_dir.rstrip("/").replace("/", "_")
     d = os.path.join(SCRATCH_ROOT, f"late_drop3{tag}")
-    done = os.path.join(d, "_SPLIT_DONE")
-    if os.path.exists(done):
-        with open(done) as f:
-            if f.read() == fingerprint:
-                return d
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts", F.unix_micros(F.col("ts"))  # keep BIGINT micros: EVENTS_DDL schema
-    )
-    splits = (
-        (F.col("event_id") % 4).isin(0, 2),
-        F.col("event_id") % 4 == 1,
-        F.col("event_id") % 4 == 3,
-    )
-    for idx, pred in enumerate(splits):
-        part_dir = os.path.join(d, f"_part{idx}")
-        ev.where(pred).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        src = next(
-            os.path.join(part_dir, f)
-            for f in os.listdir(part_dir)
-            if f.endswith(".parquet")
+
+    def _build() -> None:
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d, exist_ok=True)
+        ev = load_table(spark, sf_dir, "events").withColumn(
+            "ts", F.unix_micros(F.col("ts"))  # keep BIGINT micros: EVENTS_DDL schema
         )
-        dst = os.path.join(d, f"batch{idx}.parquet")
-        shutil.move(src, dst)
-        shutil.rmtree(part_dir, ignore_errors=True)
-        t = 1_600_000_000 + idx * 1000  # strictly increasing mtimes
-        os.utime(dst, (t, t))
-    with open(done, "w") as f:
-        f.write(fingerprint)
+        splits = (
+            (F.col("event_id") % 4).isin(0, 2),
+            F.col("event_id") % 4 == 1,
+            F.col("event_id") % 4 == 3,
+        )
+        for idx, pred in enumerate(splits):
+            part_dir = os.path.join(d, f"_part{idx}")
+            ev.where(pred).coalesce(1).write.mode("overwrite").parquet(part_dir)
+            src = next(
+                os.path.join(part_dir, f)
+                for f in os.listdir(part_dir)
+                if f.endswith(".parquet")
+            )
+            dst = os.path.join(d, f"batch{idx}.parquet")
+            shutil.move(src, dst)
+            shutil.rmtree(part_dir, ignore_errors=True)
+            t = 1_600_000_000 + idx * 1000  # strictly increasing mtimes
+            os.utime(dst, (t, t))
+
+    ensure(d, "_SPLIT_DONE", fingerprint, _build, published=())
     return d
 
 
@@ -411,6 +409,7 @@ def b_stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY (every key in exactly one store shard).  Idempotent per
     corpus via the same fingerprint discipline as the late-drop split
     dir."""
+    from stellarsql_spark.artifacts import ensure
     from stellarsql_spark.catalog import table_path
     from stellarsql_spark.sources.io import SCRATCH_ROOT
 
@@ -427,12 +426,8 @@ def b_stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = sf_dir.rstrip("/").replace("/", "_")
     base = os.path.join(SCRATCH_ROOT, f"state_reader{tag}")
     ckpt = os.path.join(base, "ckpt")
-    done = os.path.join(base, "_DONE")
-    fresh = True
-    if os.path.exists(done):
-        with open(done) as f:
-            fresh = f.read() != fingerprint
-    if fresh:
+
+    def _build() -> None:
         shutil.rmtree(base, ignore_errors=True)
         os.makedirs(base, exist_ok=True)
         counted = events_stream(spark, sf_dir).groupBy("user_id").count()
@@ -447,8 +442,8 @@ def b_stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.processAllAvailable()
         finally:
             q.stop()
-        with open(done, "w") as f:
-            f.write(fingerprint)
+
+    ensure(base, "_DONE", fingerprint, _build, published=())
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.user_id").alias("user_id"),
@@ -813,13 +808,12 @@ def b_stream_run_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _multibatch_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     import glob
 
+    from stellarsql_spark.artifacts import ensure
     from stellarsql_spark.catalog import content_fingerprint, table_path
-    from stellarsql_spark.sources.events_layout import _build_serialized, _marker_ok
     from stellarsql_spark.sources.io import SCRATCH_ROOT
 
     tag = sf_dir.rstrip("/").replace("/", "_")
     d = os.path.join(SCRATCH_ROOT, f"stream_events_mb{tag}")
-    marker = os.path.join(d, "_MB_DONE")
     src = table_path(sf_dir, "events")
     # st only seeds the strictly-increasing utime base below; the
     # rebuild marker keys on the content listing (file corpora: size +
@@ -830,8 +824,6 @@ def _multibatch_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     # splits tied within one JVM millisecond and streamed in arbitrary
     # listing order — caught by the r11 engine-drain window fuzz)
     fp = f"{content_fingerprint(src)}:{n_files}:v2"
-    if _marker_ok(marker, fp):
-        return d
 
     def _build() -> None:
         ev = load_table(spark, sf_dir, "events")
@@ -862,7 +854,9 @@ def _multibatch_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
             t_ns = st.st_mtime_ns + (i + 1) * 1_000_000_000
             os.utime(dst, ns=(t_ns, t_ns))
 
-    _build_serialized(d, marker, fp, _build)
+    # the split files are moved out of their parquet writes, so there
+    # is no _SUCCESS to check
+    ensure(d, "_MB_DONE", fp, _build, published=())
     return d
 
 

@@ -70,8 +70,11 @@ def test_asof_equal_timestamp_click_matches(spark):
     import os
     import tempfile
 
+    from stellarsql_spark.sources.io import SCRATCH_ROOT
+
     events = spark.createDataFrame(rows, schema)
-    with tempfile.TemporaryDirectory(dir="/root/repo/.scratch") as d:
+    os.makedirs(SCRATCH_ROOT, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=SCRATCH_ROOT) as d:
         path = os.path.join(d, "events.parquet")
         events.coalesce(1).write.parquet(path)
         out = b_join_asof(spark, d).collect()

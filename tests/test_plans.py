@@ -55,8 +55,11 @@ def test_partitioned_write_prunes_partitions(spark, sf_dir):
     import os
     import tempfile
 
+    from stellarsql_spark.sources.io import SCRATCH_ROOT
+
     o = load_table(spark, sf_dir, "orders")
-    with tempfile.TemporaryDirectory(dir="/root/repo/.scratch") as d:
+    os.makedirs(SCRATCH_ROOT, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=SCRATCH_ROOT) as d:
         out = os.path.join(d, "orders_part")
         o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
         back = spark.read.parquet(out).where(F.col("o_orderstatus") == "F")

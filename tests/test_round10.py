@@ -302,7 +302,7 @@ class TestOnepartGate:
         through the same audit path preflight runs."""
         import sys
 
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
         from pyspark.sql import Window
 
         from tools.plan_audit import audit_one, onepart_allowlist

@@ -180,7 +180,7 @@ class TestBucketCrossSessionReuse:
 
         probe = r"""
 import json, os, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, REPO)
 from urllib.parse import urlparse
 from pyspark.sql import SparkSession
 
@@ -204,9 +204,10 @@ to2, n2, m2 = one_session()   # fresh catalog, same files expected
 print(json.dumps({"same_table": to1 == to2, "same_rows": n1 == n2,
                   "same_files": m1 == m2, "n": n1}))
 """
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         out = subprocess.run(
-            [sys.executable, "-c", probe], capture_output=True, text=True,
-            cwd="/root/repo", timeout=300,
+            [sys.executable, "-c", f"REPO = {repo!r}\n" + probe],
+            capture_output=True, text=True, cwd=repo, timeout=300,
         )
         assert out.returncode == 0, out.stderr[-2000:]
         res = json.loads(out.stdout.strip().splitlines()[-1])

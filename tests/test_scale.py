@@ -4,6 +4,8 @@ structure, so pin that contract at factor 2 on the small corpus."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from stellarsql_spark.catalog import load_table
@@ -45,3 +47,8 @@ def test_join_structure_scales_linearly(spark, sf_dir, tmp_path):
     assert load_table(spark, out, "nation").count() == load_table(spark, sf_dir, "nation").count()
     # events keep a readable timestamp column after the round trip
     assert dict(load_table(spark, out, "events").dtypes)["ts"] == "timestamp"
+    # a second call reuses the corpus: same directory, marker untouched
+    marker = os.path.join(out, "_SCALED_DONE")
+    mtime = os.stat(marker).st_mtime_ns
+    assert ensure_scaled_corpus(spark, sf_dir, FACTOR, out_root=str(tmp_path)) == out
+    assert os.stat(marker).st_mtime_ns == mtime

@@ -13,6 +13,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 import traceback
@@ -21,7 +22,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from stellarsql_spark.catalog import TABLES, table_path  # noqa: E402
 from stellarsql_spark.registry import all_specs  # noqa: E402

@@ -21,10 +21,11 @@ Usage: python tools/plan_audit.py [--sf DIR] [--write-md PLANS.md]
 from __future__ import annotations
 
 import argparse
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from stellarsql_spark.registry import all_specs  # noqa: E402
 from stellarsql_spark.session import get_spark  # noqa: E402
@@ -33,7 +34,6 @@ from stellarsql_spark.session import get_spark  # noqa: E402
 ROW_UDF_ALLOWED = {"b_udf_scalar"}
 
 import json  # noqa: E402
-import os  # noqa: E402
 
 _ALLOWLIST_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "onepart_allowlist.json")
