@@ -1,33 +1,55 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+(default /root/testdata/sf0.1), then depth tiers on replicated corpora.
 
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+and writes the full result to BENCH_FULL.json when the depth tiers ran.
 
-Protocol: one shared SparkSession (session startup is excluded — it is
-fixed overhead amortized across any real workload); corpus tables are
-cached once (CacheManager matches later reads by plan equality — the
-"cache hot tables" practice from BASELINE.md); each query's logical
-plan is prepared ONCE (prepared-statement style — building the
-DataFrame costs ~50-100 py4j round trips ≈ 0.1-0.2 s of pure Python
-chatter that no steady-state engine pays per execution), then executed
-once untimed (JIT/codegen warmup) and three times timed, reporting the
-minimum — steady-state per-query *execution* latency including the
-full scan/shuffle/aggregate work, matching how the DuckDB baseline
-numbers in BASELINE.md were taken (repeat executions of a parsed
-query).
+Sizing comes from the host that runs the bench: ``local[nproc]``
+(``$SPARK_GRAFT_CPUS`` overrides) and a driver heap derived from
+MemAvailable (``$SPARK_GRAFT_DRIVER_MEM`` overrides), both from
+``perfbench/host.py``; the host stamp is recorded in the result.
+
+Headline protocol: one shared SparkSession (session startup is
+excluded — it is fixed overhead amortized across any real workload);
+corpus tables are cached once (CacheManager matches later reads by plan
+equality — the "cache hot tables" practice from BASELINE.md); each
+query's logical plan is prepared ONCE (prepared-statement style —
+building the DataFrame costs ~50-100 py4j round trips ≈ 0.1-0.2 s of
+pure Python chatter that no steady-state engine pays per execution),
+then executed once untimed (JIT/codegen warmup) and three times timed,
+reporting the minimum — steady-state per-query *execution* latency
+including the full scan/shuffle/aggregate work, matching how the DuckDB
+baseline numbers in BASELINE.md were taken (repeat executions of a
+parsed query).
+
+Depth tiers: one table (``TIERS``) run by one loop. A tier is skipped,
+with the reason recorded, when its replicated corpus does not fit the
+free disk under ``.scale/`` or no time is left of ``BUDGET_S``; a tier
+that runs may use the remaining budget divided by the remaining tiers.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
+from collections.abc import Callable
+from typing import NamedTuple
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
+from perfbench.host import driver_heap_mb, stamp
+from stellarsql_spark.catalog import TABLES, load_table, table_path
 from stellarsql_spark.registry import all_specs
+from stellarsql_spark.scale import (
+    ensure_graph_corpus,
+    ensure_scaled_corpus,
+    ensure_skewed_corpus,
+)
 from stellarsql_spark.session import get_spark, tune_for_data_size
 
 HEADLINE = (
@@ -43,202 +65,61 @@ HEADLINE = (
     "b_ev_funnel",        # event-log funnel rollup
 )
 
-# The 5 queries with DuckDB rows in BASELINE.md; re-run at a replicated
-# 30× corpus to measure how much of the sf0.1 latency is fixed overhead
-# (a 30× corpus costing << 30× the time is the overhead story, proven).
-# The probe also times each query's oracle SQL in DuckDB on the SAME
-# scaled corpus, so the Spark-vs-embedded ratio at 30× is measured,
-# not extrapolated: fixed overhead amortizes while DuckDB's cost grows
-# with the data.
-SCALE_MATCHED = HEADLINE[:5]
-SCALE_FACTOR = 30
+# Wall-clock budget for the whole run, headline included.
+BUDGET_S = 2700
 
-# Second tier at 100×: the three queries whose 30× Spark latency is
-# still mostly fixed overhead (sub-second totals carrying ~0.1-0.2 s
-# of scheduler/Python-dispatch floor). At 100× the data term finally
-# dominates on BOTH engines, so this ratio — not the 30× one — is the
-# honest predictor of the cluster-scale comparison. The throughput-
-# bound pair (b_agg_groupby, b_topk_per_group) is already data-
-# dominated at 30× and re-probing it at 100× would only triple bench
-# wall-clock for the same answer.
-SCALE2_MATCHED = ("b_join_inner", "b_stream_tumbling", "b_llm_cosine_topk")
-SCALE2_FACTOR = 100
+# Every depth tier's trials stop starting once its share of the budget
+# is spent; the clock starts at import, so the headline counts too.
+_T0 = time.perf_counter()
 
-# Third tier at 300× (~3.5 GiB): the deepest data-dominated
-# comparison — the tier where tune_for_data_size runs the actual
-# large-input configuration (AQE on, bytes/128 MiB partitions) and
-# where the flagship aggregate measured FASTER than DuckDB in round
-# 4's one-off SCALE.md probe. Promoted to a permanent bench block in
-# round 5 so the 100 TB story is re-measured every round, not
-# narrated once.
-SCALE3_MATCHED = (
-    "b_agg_groupby",
-    "b_agg_groupby_served",
-    "b_join_inner",
-    "b_join_inner_bucketed",
-    "b_join_inner_served",
-    "b_stream_tumbling",
-    "b_stream_tumbling_bucketed",
-    "b_stream_tumbling_served",
+
+def _elapsed() -> float:
+    return time.perf_counter() - _T0
+
+
+class Corpus(NamedTuple):
+    suffix: str                         # dir under .scale/: <sf tag><suffix>
+    replicated: tuple[str, ...] | None  # tables copied factor× (None = all)
+    build: Callable                     # (spark, sf_dir, factor) -> corpus dir
+
+
+class Tier(NamedTuple):
+    key: str                # result key in BENCH_FULL.json
+    tag: str                # key in the compact stdout line
+    factor: int
+    keys: tuple[str, ...]
+    runs: int               # min-of-N per key
+    corpus: Corpus
+    # (spark, corpus dir, factor) -> block; None times `keys` vs DuckDB
+    action: Callable | None = None
+
+
+_FULL = Corpus("_x{}", None, ensure_scaled_corpus)
+# The 1000× tier replicates only the tables its keys read (~14 GiB
+# instead of ~60 GiB); the others are copied at base size.
+_DEEP_TABLES = ("lineitem", "orders", "customer", "events", "embeddings", "documents")
+_PART = Corpus(
+    f"_x{{}}p{len(_DEEP_TABLES)}", _DEEP_TABLES,
+    lambda spark, sf_dir, f: ensure_scaled_corpus(spark, sf_dir, f, tables=_DEEP_TABLES),
+)
+# Zipfian lineitem join key: hot orderkey #1 carries ~18% of lineitem,
+# so the shuffle-join straggler is real.
+_SKEW = Corpus("_x{}z", ("orders", "lineitem"), ensure_skewed_corpus)
+# Time-shifted events replicas: the co-occurrence graph grows as factor
+# disjoint copies (linear edges) instead of quadratically denser minutes.
+_GRAPH = Corpus("_x{}g", ("events",), ensure_graph_corpus)
+
+# The deep tiers' shared set: each plain shape beside its bucketed and
+# served twins, so one block separates the exchange, layout and kernel
+# terms at depth.
+_DEEP_KEYS = (
+    "b_agg_groupby", "b_agg_groupby_served",
+    "b_join_inner", "b_join_inner_bucketed", "b_join_inner_served",
+    "b_stream_tumbling", "b_stream_tumbling_bucketed", "b_stream_tumbling_served",
     "b_llm_cosine_topk",
-    # r11 (VERDICT #3): the two headline shapes that had no deep-tier
-    # story — the hash-agg top-k and the exact-dedup — now re-measured
-    # every round.  Dedup measured 1.19×/1.00× at 300×/1000× on its
-    # first probe (under the bar); topk's collect_list exchange put it
-    # at 2.91×/2.69×, so it ships its bucketed twin (same lineage move
-    # as the join family): groupBy satisfied at rest, zero shuffle.
-    "b_topk_per_group",
-    "b_topk_per_group_bucketed",
-    "b_topk_per_group_served",
+    "b_topk_per_group", "b_topk_per_group_bucketed", "b_topk_per_group_served",
     "b_llm_dedup_exact",
 )
-SCALE3_FACTOR = 300
-
-# Fourth tier at 1000× (~14 GiB over the five probe tables): the
-# deepest extrapolation point. Round 6 measured only the flagship
-# here (0.83×, Spark wins); this block re-measures the three shapes
-# that sat above the 2× band at 300× — whether their ratios converge
-# with depth like the flagship's did, or plateau at the per-row
-# kernel constant, is the 100 TB answer. The bucketed join twin rides
-# along to separate the exchange term from the kernel term at depth.
-# The day-partitioned/hour-sorted events twin rides both deep tiers
-# (like the bucketed join twin) to separate the layout term from the
-# decode-constant term: r8 measured 1.18× vs DuckDB at 1000× against
-# the plain form's 1.9-4.0×, while at 300× both forms sit on the task
-# floor (~0.45 s) and the layout is a wash.
-SCALE4_MATCHED = (
-    "b_agg_groupby",
-    "b_agg_groupby_served",
-    "b_join_inner",
-    "b_join_inner_bucketed",
-    "b_join_inner_served",
-    "b_stream_tumbling",
-    "b_stream_tumbling_bucketed",
-    "b_stream_tumbling_served",
-    "b_llm_cosine_topk",
-    "b_topk_per_group",
-    "b_topk_per_group_bucketed",
-    "b_topk_per_group_served",
-    "b_llm_dedup_exact",
-    # r14 (VERDICT #1): the incremental-dedup probe — the family's one
-    # >2× plain read (2.10× at this tier, r13) — now re-measured every
-    # round beside its bucketed standing-set twin, the same
-    # plain-vs-layout pairing as the join and topk families.
-    "b_llm_dedup_incremental",
-    "b_llm_dedup_incremental_bucketed",
-)
-SCALE4_FACTOR = 1000
-# Only these six tables replicate at 1000×; the rest stay base-size.
-# documents joined the set in r11 so b_llm_dedup_exact has a deepest
-# datapoint (VERDICT #3); it adds ~1.5 GiB to the one-off build.
-SCALE4_TABLES = (
-    "lineitem", "orders", "customer", "events", "embeddings", "documents"
-)
-
-# Tables each probe query touches — deep tiers cache ONLY these (at
-# 300× the full ten-table corpus no longer fits the bench heap
-# comfortably; caching unused tables just evicts the used ones).
-_PROBE_TABLES = {
-    "b_agg_groupby": ("lineitem",),
-    "b_agg_groupby_served": ("lineitem",),
-    "b_join_inner": ("orders", "customer", "nation", "region"),
-    "b_join_inner_bucketed": ("orders", "customer", "nation", "region"),
-    "b_join_inner_served": ("orders", "customer", "nation", "region"),
-    "b_topk_per_group": ("orders", "customer"),
-    "b_topk_per_group_bucketed": ("orders", "customer"),
-    "b_topk_per_group_served": ("orders", "customer"),
-    "b_stream_tumbling": ("events",),
-    "b_stream_tumbling_bucketed": ("events",),
-    "b_stream_tumbling_served": ("events",),
-    "b_llm_cosine_topk": ("embeddings",),
-    "b_llm_dedup_exact": ("documents",),
-    "b_llm_dedup_incremental": ("documents",),
-    "b_llm_dedup_incremental_bucketed": ("documents",),
-    "b_llm_bm25": ("documents",),
-    "b_mm_image_ahash": ("documents",),
-    "b_join_salted": ("orders", "lineitem"),
-    "b_join_salted_hot": ("orders", "lineitem"),
-    "b_join_skew_split": ("orders", "lineitem"),
-    "b_join_skew_bypass": ("orders", "lineitem"),
-    "b_join_skew_coldagg": ("orders", "lineitem"),
-    "b_graph_label_prop_converged": ("events",),
-    "b_graph_pagerank_minute": ("events",),
-    "b_graph_pagerank_minute_served": ("events",),
-}
-
-# Skew tier (r8): the skew-handling forms of the same orders⋈lineitem
-# rollup, measured on the ZIPFIAN corpus (ensure_skewed_corpus — hot
-# orderkey #1 carries ~18% of lineitem) so the shuffle-join straggler
-# is real, not narrated. Both keys share one oracle, so DuckDB's time
-# on the same skewed parquet is the common denominator. The blanket-
-# salt form (b_join_salted) is deliberately NOT in the timed set: its
-# NSALT× build-side replication measured 96.5 s at this tier (one-off,
-# SCALE.md round-8) and re-timing the documented negative 7× per round
-# would cost more bench wall-clock than every other block combined.
-SKEW_MATCHED = (
-    "b_join_skew_split",
-    "b_join_salted_hot",
-    "b_join_skew_bypass",
-    "b_join_skew_coldagg",
-)
-SKEW_FACTOR = 300
-
-# Retrieval tier (r8): the lexical-retrieval corpus pass at depth.
-# b_llm_bm25's full-corpus work is exactly one tokenize + (doc, word)
-# count shuffle — the plan shape every text-index build shares — and
-# the 300× documents replica (~1.5M distinct docs, doc_ids disjoint
-# per replica) rides the existing sf0.1_x300 corpus, so the tier adds
-# no one-off build. The key is tagged "eager" (corpus stats are
-# harvested driver-side at build), so the timed unit is builder+count
-# — the same end-to-end work DuckDB's single oracle statement does.
-RETRIEVAL_MATCHED = ("b_llm_bm25",)
-RETRIEVAL_FACTOR = 300
-
-# Graph tier (r12 VERDICT #2): the iterate-to-fixpoint loop at depth.
-# b_graph_label_prop_converged runs LP_CONV_CAP synchronous LPA rounds
-# with per-round localCheckpoint — the loop discipline every iterative
-# graph key shares — so this block puts a measured cost on it.  The
-# corpus is the TIME-SHIFTED replica (ensure_graph_corpus): shifting
-# each replica's timestamps keeps co-occurrence bucket density
-# constant, so the graph grows as factor disjoint copies (linear
-# edges — the honest "more communities" scale shape) instead of
-# quadratically denser minutes.  The key is tagged "eager" (the loop
-# executes at builder time).  LPA-converged rather than
-# b_graph_components because the ratio needs a feasible twin: the
-# components oracle is recursive-CTE REACHABILITY, which is
-# O(Σ component²) rows — measured >590 s at a mere 100× (Spark's
-# min-label loop: 8.9 s) — while the LPA oracle is LP_CONV_CAP
-# unrolled linear rounds, the same round count the Spark loop runs.
-GRAPH_MATCHED = (
-    "b_graph_label_prop_converged",
-    # r14 (VERDICT #2): the tier's second shape — PageRank's
-    # sum-of-contributions round on the SAME minute graph, so the two
-    # rows isolate the algorithm term, not the graph.  The hourly
-    # b_graph_pagerank's 70%-density quasi-clique (~237M edges at
-    # 300×) prices out of a per-round block; its one-off 30× depth
-    # row lives in SCALE.md round-14.
-    "b_graph_pagerank_minute",
-    # The served twin: same fixed point over the C286-maintained edge
-    # artifact — the pair prices the edge-build term the LPA
-    # decomposition isolated (plain = re-derive per query, served =
-    # iteration only).
-    "b_graph_pagerank_minute_served",
-)
-GRAPH_FACTOR = 300
-
-# Multimodal tier (r14, VERDICT #4): the binary-codec family's first
-# depth row.  b_mm_image_ahash is the family's end-to-end shape (real
-# BMP encode → decode → integer aHash → 2-byte-hash collision count):
-# two Arrow-batched map-only passes plus one 15-bit-key shuffle, so
-# the claim under test is "per-row work is the codec; scaling is
-# embarrassing".  Rides the existing sf0.1_x300 corpus (documents
-# replicate there), so the tier adds no one-off build.  The DuckDB
-# twin predicts every bit arithmetically from the md5 hex — it does
-# NO codec work — so the ratio prices the full Python-codec round
-# trip against a pure-SQL oracle, the honest worst-case framing.
-MM_MATCHED = ("b_mm_image_ahash",)
-MM_FACTOR = 300
-
 
 # Keys whose result set is corpus-sized (top-3 per CUSTOMER is
 # |customers|×3 rows — 13.5M at 300×): time the duck side as
@@ -261,93 +142,33 @@ def _oracle_sql_for_timing(spec) -> str | None:
     return spec.oracle
 
 
-def _duck_times(sf_dir: str, specs, names, runs: int = 3) -> dict[str, float]:
-    """Best-of-N DuckDB latency for each query's oracle SQL over the
-    same parquet files (same warm-cache, repeat-execution protocol —
-    pass the same ``runs`` both engines get, so the ratio stays a
-    fair min-vs-min under host-VM throughput noise)."""
-    import duckdb
-
-    from stellarsql_spark.catalog import TABLES, table_path
-
-    con = duckdb.connect()
-    for t in TABLES:
-        p = table_path(sf_dir, t)
-        src = os.path.join(p, "*.parquet") if os.path.isdir(p) else p
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
-    out: dict[str, float] = {}
-    for name in names:
-        sql = _oracle_sql_for_timing(specs[name])
-        if sql is None:
-            continue
-        out[name] = round(_best_of(lambda: con.execute(sql).fetchall(), runs=runs), 4)
-    con.close()
-    return out
-
-
-# Sub-second Spark reads get 2 extra trials (r11 VERDICT #1): they
-# are floor-band measurements where a single descheduling blip is the
-# same order as the signal, and two more mins cost ~nothing there.
+# Sub-second Spark reads get 2 extra trials: they are floor-band
+# measurements where a single descheduling blip is the same order as
+# the signal, and two more mins cost ~nothing there.
 _SUBSEC_EXTRA = 2
 
 
-# Per-query contention-resettle guard (r13 VERDICT #7): a deep-tier
-# query whose trial spread exceeds this fraction of its own min (and
-# is over a second in absolute terms) was likely hit by a host
-# contention wave mid-trials — the r13 1000× artifact recorded a
-# 13.9 s spread on a 14.1 s min that only the min-of protocol
-# absorbed.  Instead of leaving a silent 2× spread in the artifact,
-# the harness sleeps one wave-length and re-pairs two extra trials,
-# recording the query under "resettled" so the spread column stays an
-# honest instrument.  Bounded: one resettle per query, two per block.
-_SPREAD_BAR = 0.5
-_SPREAD_ABS_MIN = 1.0
-_RESETTLE_TRIALS = 2
-
-
 def _interleaved_times(spark, scaled_dir, specs, names, runs: int,
-                       spread_guard: bool = False,
-                       deadline: float | None = None):
+                       share_end: float | None):
     """min-of-N for BOTH engines with PER-QUERY engine-paired trials:
     for each query in turn, warm both engines, then alternate
     [spark, duckdb] back-to-back for all its trials before moving to
-    the next query.
-
-    r11 VERDICT #1: the previous protocol interleaved ALL queries per
-    round ([spark q1..qk, duck q1..qk] × N), which had the engines'
-    paired trials minutes apart under the cache churn of 12 other
-    working sets — the committed 1000× block read joinB 2.42× and
-    tumB 2.31× while dedicated idle probes (builder and judge,
-    same-session) read 1.72–1.85× and 0.88×. Per-query pairing keeps
-    both properties that matter and drops the churn:
+    the next query.  Per-query pairing keeps
     - cache coherence: nothing evicts a query's pages between its own
-      trials, matching how a dedicated probe (and the r10/r11
-      adjudications) measured;
+      trials (the untimed warm call reads the key's files just before);
     - drift cancellation at the tightest spacing: the Spark trial and
       the DuckDB trial it is ratioed against run seconds apart, so a
-      host-VM contention wave inflates BOTH engines' trials for that
+      host contention wave inflates BOTH engines' trials for that
       query and min-vs-min still cancels it.
     Sub-second Spark shapes extend to min-of-(runs+2) — see
     _SUBSEC_EXTRA.
 
-    r15 trial-shed deadline: the block-entry guards in main() protect
-    a block from STARTING too late, but not the blocks BEHIND a block
-    that stalls mid-trials (the r15 adverse-window test run watched
-    one wave-stalled x1000 trial absorb 506 s and the tier starve
-    stream/mm/graph — the exact failure that cost the r14 driver
-    artifact its stream probe).  `deadline` is the NEXT block's entry
-    guard (same _budget_elapsed clock): once it has passed, the block
-    stops STARTING new trials — every remaining query still gets its
-    warm + one paired (spark, duckdb) trial, so every key reports an
-    honest min (of fewer, recorded per-query under "trial_shed" /
-    compact `ts`), and the trailing blocks keep their window.  In any
-    run where block N+1's guard was met — every committed clean run,
-    and the r14 driver run — block N finished before that guard by
-    definition, so the deadline never fires and the min-of counts are
-    byte-identical to r14's methodology."""
+    ``share_end`` is the elapsed time at which the tier's budget share
+    runs out: past it no new trial starts, but every remaining query
+    still gets its warm run plus one paired (spark, duckdb) trial, so
+    every key reports a min (of fewer trials, recorded in the returned
+    shed list) and the tiers behind keep their share."""
     import duckdb
-
-    from stellarsql_spark.catalog import TABLES, table_path
 
     con = duckdb.connect()
     for t in TABLES:
@@ -357,12 +178,10 @@ def _interleaved_times(spark, scaled_dir, specs, names, runs: int,
     s_best = {n: float("inf") for n in names}
     s_worst = {n: 0.0 for n in names}
     d_best: dict[str, float] = {}
-    resettled: list[str] = []
     shed: list[str] = []
-    global _RESETTLE_SLEEP
 
-    def _past_deadline() -> bool:
-        return deadline is not None and _budget_elapsed() > deadline
+    def spent() -> bool:
+        return share_end is not None and _elapsed() > share_end
 
     for n in names:
         sfn = prepare(specs[n], spark, scaled_dir)
@@ -380,54 +199,25 @@ def _interleaved_times(spark, scaled_dir, specs, names, runs: int,
             s_worst[n] = max(s_worst[n], dt)
             # Extend whenever the running min is sub-second (not just
             # trial 0): a contention blip on the first trial must not
-            # deny a genuinely sub-second shape its extra trials —
-            # precisely the floor-band case this targets (r12 ADVICE).
-            if trials == runs and s_best[n] < 1.0 and not _past_deadline():
+            # deny a genuinely sub-second shape its extra trials.
+            if trials == runs and s_best[n] < 1.0 and not spent():
                 trials = runs + _SUBSEC_EXTRA
             if dsql is not None:
                 t0 = time.perf_counter()
                 con.execute(dsql).fetchall()
                 d_best[n] = min(d_best[n], time.perf_counter() - t0)
             i += 1
-            # Trial-shed deadline (see docstring): checked AFTER a
-            # completed pair, so min-of-≥1 is guaranteed per query.
-            if i < trials and _past_deadline():
+            # Checked AFTER a completed pair: min-of-≥1 per query.
+            if i < trials and spent():
                 shed.append(n)
                 break
-        # Spread guard (r13 VERDICT #7): a mid-trials contention wave
-        # shows up as spread ≫ min.  Wait one wave-length, re-pair two
-        # trials, and RECORD the resettle — the reader sees "this
-        # query's spread column includes a wave" instead of inferring
-        # it.  The min only ever improves; the spread keeps the
-        # pre-resettle worst so the wave stays visible.
-        if (
-            spread_guard
-            and not _past_deadline()
-            and len(resettled) < 2
-            and s_best[n] > 0
-            and (s_worst[n] - s_best[n]) > _SPREAD_ABS_MIN
-            and (s_worst[n] - s_best[n]) > _SPREAD_BAR * s_best[n]
-        ):
-            time.sleep(60)
-            _RESETTLE_SLEEP += 60.0
-            for _ in range(_RESETTLE_TRIALS):
-                t0 = time.perf_counter()
-                sfn()
-                s_best[n] = min(s_best[n], time.perf_counter() - t0)
-                if dsql is not None:
-                    t0 = time.perf_counter()
-                    con.execute(dsql).fetchall()
-                    d_best[n] = min(d_best[n], time.perf_counter() - t0)
-            resettled.append(n)
     con.close()
     return (
         {n: round(v, 4) for n, v in s_best.items()},
         {n: round(v, 4) for n, v in d_best.items()},
-        # per-query max-min across the timed trials: the variance bound
-        # (r8 VERDICT #4) that tells a single-run reader whether a
-        # sub-half-second number is floor-noise or signal
+        # per-query max-min across the timed trials: tells a single-run
+        # reader whether a sub-half-second number is floor-noise or signal
         {n: round(s_worst[n] - s_best[n], 4) for n in names},
-        resettled,
         shed,
     )
 
@@ -458,25 +248,21 @@ def _best_of(fn, runs: int = 3) -> float:
     return best
 
 
-def _stream_throughput(spark, sf_dir: str, factor: int) -> dict:
+def _stream_probe(spark, scaled_dir: str, factor: int) -> dict:
     """Micro-batch throughput of the watermarked tumbling aggregate
     over the ``factor``× events corpus: file source, maxFilesPerTrigger
     =1 (each of the ~6 corpus files is one micro-batch incrementally
     updating (window, type) state), memory sink, synchronous drain.
-    State is bounded by hours×types (~3.6k rows across 32 state-store
-    partitions), NOT by input rows — see SCALE.md round-8 for the
-    sizing arithmetic."""
-    from stellarsql_spark.catalog import load_table, table_path
-    from stellarsql_spark.scale import ensure_scaled_corpus
+    State is bounded by hours×types, NOT by input rows — see SCALE.md
+    round-8 for the sizing arithmetic.  The socket-source twins ride
+    along under "socket" and "socket_sustained"."""
     from stellarsql_spark.streaming.runtime import (
         events_stream_from_dir,
         run_to_memory,
+        sustained_socket_drain,
     )
     from stellarsql_spark.streaming.windows import tumbling_hourly
 
-    # tables=None reuses the full 100× corpus scale_probe_deep already
-    # built this run — no extra one-off build for the stream probe.
-    scaled_dir = ensure_scaled_corpus(spark, sf_dir, factor)
     events_dir = table_path(scaled_dir, "events")
     n_in = load_table(spark, scaled_dir, "events").count()  # warms page cache too
 
@@ -489,27 +275,27 @@ def _stream_throughput(spark, sf_dir: str, factor: int) -> dict:
         out_rows = run_to_memory(streamed, output_mode=output_mode).count()
         return out_rows, time.perf_counter() - t0
 
-    # maxFilesPerTrigger curve (r8 VERDICT #5): the ~2 s/batch fixed
-    # cost (planning + state-store commit + sink commit) and its
-    # amortization, measured rather than inferred from two endpoints.
-    # The per-row work is constant across the curve, so time deltas
-    # between settings ARE the per-batch fixed cost.
+    # maxFilesPerTrigger curve: the per-row work is constant across the
+    # curve, so time deltas between settings ARE the per-batch fixed
+    # cost (planning + state-store commit + sink commit).
     curve: dict[str, float] = {}
-    out_rows = 0
     for mf in (1, 2, 3, 6):
-        rows, t = drain(mf)
-        out_rows = rows
+        out_rows, t = drain(mf)
         curve[str(mf)] = round(t, 3)
     t_incr = curve["1"]
     _, t_mega = drain(None)
-    # Deployment shape (r8 VERDICT #5): APPEND mode with watermark
-    # eviction — each micro-batch emits only windows the watermark has
-    # closed and DROPS their state, so state is bounded by open windows
-    # (2h watermark / 1h windows ≈ 3 per type), not by total hours.
-    # complete-mode is the test-harness convenience; this is what a
-    # production sink runs. Rows_out is smaller by design: windows
-    # still open when the source drains never emit.
+    # Deployment shape: APPEND mode with watermark eviction — each
+    # micro-batch emits only windows the watermark has closed and DROPS
+    # their state, so state is bounded by open windows. Rows_out is
+    # smaller by design: windows still open when the source drains
+    # never emit.
     app_rows, t_app = drain(1, output_mode="append")
+    sock = _socket_throughput(spark)
+    # Pinned-rate push contract: worst steady batch and state bound, so
+    # a regression in the single-reader path shows here too.
+    rows = sustained_socket_drain(spark, rows_per_second=20_000,
+                                  min_batches=8, trigger_ms=1000)
+    steady = rows[2:] if len(rows) > 2 else rows
     return {
         "factor": factor,
         "rows_in": n_in,
@@ -522,20 +308,34 @@ def _stream_throughput(spark, sf_dir: str, factor: int) -> dict:
         "drain_sec_append": round(t_app, 3),
         "rows_per_sec_append": int(n_in / t_app),
         "rows_out_append": app_rows,
+        "socket": sock,
+        "socket_sustained": (
+            {
+                "rate_rps": 20_000,
+                "batches": len(rows),
+                "max_steady_batch_ms": max(
+                    (r["duration_ms"] for r in steady), default=None
+                ),
+                "max_state_rows": max(
+                    (r["state_rows"] for r in steady), default=None
+                ),
+            }
+            if rows
+            else {"skipped": "feeder failed to bind"}
+        ),
     }
 
 
 def _socket_throughput(spark, n_rows: int = 200_000) -> dict:
-    """Push-path throughput (r9 VERDICT #7): drain the watermarked
-    tumbling aggregate from the SOCKET source — a localhost feeder
-    thread streams ``n_rows`` CSV event lines over one TCP connection
-    while Structured Streaming's push-based listener micro-batches
-    them — so the network source's per-batch cost is on record beside
-    the file-source figure.  The timed unit is stream-start →
-    all-rows-aggregated (complete-mode count reaches n_rows), i.e. it
-    includes the TCP transfer, parse, and state updates.  At
-    production scale the same pipeline swaps the socket for Kafka;
-    nothing downstream of the parse changes."""
+    """Push-path throughput: drain the watermarked tumbling aggregate
+    from the SOCKET source — a localhost feeder thread streams
+    ``n_rows`` CSV event lines over one TCP connection while Structured
+    Streaming's push-based listener micro-batches them — so the network
+    source's per-batch cost is on record beside the file-source figure.
+    The timed unit is stream-start → all-rows-aggregated (complete-mode
+    count reaches n_rows), i.e. it includes the TCP transfer, parse,
+    and state updates.  At production scale the same pipeline swaps the
+    socket for Kafka; nothing downstream of the parse changes."""
     import socket as pysocket
     import threading
 
@@ -579,8 +379,7 @@ def _socket_throughput(spark, n_rows: int = 200_000) -> dict:
     t.start()
     if not ready.wait(timeout=10) or not ports:
         # feeder failed to bind (or died before listen) — this probe is
-        # optional; report it skipped instead of crashing the whole
-        # bench artifact on ports[0] (r10 ADVICE)
+        # optional; report it skipped instead of crashing the artifact
         done.set()
         return {"skipped": "socket feeder failed to bind within 10s"}
 
@@ -600,14 +399,15 @@ def _socket_throughput(spark, n_rows: int = 200_000) -> dict:
     )
     drained = 0
     try:
-        deadline = time.time() + 240
-        while time.time() < deadline:
+        give_up = time.time() + 240
+        while time.time() < give_up:
             q.processAllAvailable()
             got = spark.sql(f"SELECT COALESCE(SUM(n), 0) AS s FROM {name}").first()
             drained = int(got["s"])
             if drained >= n_rows:
                 break
-            time.sleep(0.2)
+            # wait for more socket data; raises if the query died
+            q.awaitTermination(0.2)
         dt = time.perf_counter() - t0
     finally:
         done.set()
@@ -621,10 +421,10 @@ def _socket_throughput(spark, n_rows: int = 200_000) -> dict:
     }
 
 
-# Block contention-rejection bar: a deep-tier block whose one-exchange
-# floor exceeds the headline session's by more than this is re-probed
-# once after a settle pause, then marked "contended" (see probe()).
-# 1.5 since r11 (was 2.0 — too loose, see the probe() comment).
+# A tier whose one-exchange floor exceeds the headline session's by
+# more than this is marked "contended": idle-host runs measure floor
+# ratios of 0.87–1.19, and blocks above 1.5 have read 2-3× off their
+# idle re-measures.
 _FR_BAR = 1.5
 
 
@@ -646,26 +446,130 @@ def _plan_floors(spark) -> dict[str, float]:
     return {"noop": round(noop, 4), "shuffle": round(shuffle, 4)}
 
 
-_T0 = time.perf_counter()
+def _probe(spark, scaled_dir: str, tier: Tier, share_end: float, base: dict) -> dict:
+    """One depth tier: its floors, then every key against DuckDB on the
+    same corpus.  No df.cache() at depth: the InMemoryColumnar read path
+    measured 7× slower than the vectorized parquet scan at 300×, and
+    parquet from the page cache is what the DuckDB side reads too."""
+    # The tier's own floors, loadavg and floor/headline-floor ratio make
+    # a contended run self-evident from the artifact alone.
+    block_floor = _plan_floors(spark)
+    floor_ratio = round(block_floor["shuffle"] / max(base["floor"]["shuffle"], 1e-4), 2)
+    scaled, duck, spread, shed = _interleaved_times(
+        spark, scaled_dir, all_specs(), tier.keys, tier.runs, share_end
+    )
+    blk = {
+        "factor": tier.factor,
+        "floor": block_floor,
+        "load": round(os.getloadavg()[0], 1),
+        "floor_ratio": floor_ratio,
+        "queries": scaled,
+        "spread": spread,
+        # factor means linear cost; ~1 means the sf0.1 number was fixed
+        # overhead
+        "time_ratio_vs_base": {
+            k: round(scaled[k] / base["queries"][k], 2)
+            for k in scaled
+            if k in base["queries"]
+        },
+        "duckdb": duck,
+        "ratio_vs_duckdb": {
+            k: round(scaled[k] / duck[k], 2) for k in duck if duck[k] > 0
+        },
+    }
+    if shed:
+        blk["trial_shed"] = shed
+    if floor_ratio > _FR_BAR:
+        blk["contended"] = True
+    return blk
 
-# Cumulative contention-resettle sleep (see probe()). The late-tier
-# wall-clock guards subtract it from the elapsed clock: waiting out a
-# contention wave must not eat the time budget of the blocks behind it
-# (r11 ADVICE — two deep tiers can sleep up to 360 s total, which
-# previously made the retrieval/stream tiers likelier to be dropped).
-_RESETTLE_SLEEP = 0.0
+
+TIERS = (
+    # The five BASELINE.md queries at 30×: a corpus costing << 30× the
+    # time is the fixed-overhead story, and DuckDB on the same files
+    # makes the ratio measured, not extrapolated.
+    Tier("scale_probe", "x30", 30, HEADLINE[:5], 3, _FULL),
+    # The three whose 30× latency is still mostly fixed overhead; at
+    # 100× the data term dominates on both engines.
+    Tier("scale_probe_deep", "x100", 100,
+         ("b_join_inner", "b_stream_tumbling", "b_llm_cosine_topk"), 5, _FULL),
+    # 300×: tune_for_data_size runs the large-input configuration (AQE
+    # on, bytes/128 MiB partitions).
+    Tier("scale_probe_300", "x300", 300, _DEEP_KEYS, 7, _FULL),
+    Tier("scale_probe_1000", "x1000", 1000,
+         _DEEP_KEYS + ("b_llm_dedup_incremental", "b_llm_dedup_incremental_bucketed"),
+         5, _PART),
+    # Skew-handling forms of one orders⋈lineitem rollup, sharing one
+    # oracle.  The blanket-salt b_join_salted is left out: its build-side
+    # replication measured 96.5 s at this tier (SCALE.md round-8).
+    Tier("scale_probe_skew", "skew", 300,
+         ("b_join_skew_split", "b_join_salted_hot", "b_join_skew_bypass",
+          "b_join_skew_coldagg"), 7, _SKEW),
+    # One tokenize + (doc, word) count shuffle: the plan every
+    # text-index build shares.  An "eager" key, so builder+count is timed.
+    Tier("scale_probe_retrieval", "retr", 300, ("b_llm_bm25",), 7, _FULL),
+    # The only micro-batch and socket evidence in the artifact, so it
+    # runs before the longer mm and graph tiers.
+    Tier("stream_probe", "stream", 100, (), 0, _FULL, _stream_probe),
+    # Codec round trip (BMP encode → decode → aHash) against a pure-SQL
+    # oracle that predicts every bit from the md5 hex.
+    Tier("scale_probe_mm", "mm", 300, ("b_mm_image_ahash",), 7, _FULL),
+    # The iterate-to-fixpoint loop at depth: LPA and PageRank on the
+    # same minute graph isolate the algorithm term, the served PageRank
+    # twin the edge-build term.  LPA rather than components, whose
+    # recursive-CTE oracle measured >590 s at 100×.
+    Tier("scale_probe_graph", "graph", 300,
+         ("b_graph_label_prop_converged", "b_graph_pagerank_minute",
+          "b_graph_pagerank_minute_served"), 5, _GRAPH),
+)
+
+# Left free beside a new corpus: shuffle files and spill share the disk.
+_DISK_HEADROOM = 2 << 30
 
 
-def _budget_elapsed() -> float:
-    """Wall-clock since start minus time slept waiting out contention."""
-    return time.perf_counter() - _T0 - _RESETTLE_SLEEP
+def corpus_bytes(sf_dir: str, tier: Tier, scale_root: str) -> int:
+    """Disk a tier's corpus will take: 0 if it is already built (its
+    marker is present), else base bytes × factor for the replicated
+    tables plus base bytes for the copied ones."""
+    tag = os.path.basename(sf_dir.rstrip("/"))
+    home = os.path.join(scale_root, tag + tier.corpus.suffix.format(tier.factor))
+    if os.path.exists(os.path.join(home, "_SCALED_DONE")):
+        return 0
+    rep = tier.corpus.replicated
+    return sum(
+        os.path.getsize(table_path(sf_dir, t))
+        * (tier.factor if rep is None or t in rep else 1)
+        for t in TABLES
+    )
+
+
+def run_tiers(tiers, run, sf_dir: str, scale_root: str) -> dict:
+    """The one budget rule: a tier starts only with budget left and
+    its corpus fitting on disk, and may use (remaining budget) ÷
+    (remaining tiers).  ``run(tier, share_end)`` measures one tier;
+    its block records when it started, its share and its wall time
+    (``clock_s``, seconds since start)."""
+    out = {}
+    for i, tier in enumerate(tiers):
+        left = BUDGET_S - _elapsed()
+        need = corpus_bytes(sf_dir, tier, scale_root)
+        free = shutil.disk_usage(scale_root).free
+        if left <= 0:
+            out[tier.key] = {"skipped": "time budget"}
+        elif need and need + _DISK_HEADROOM > free:
+            out[tier.key] = {"skipped": f"disk: needs {need >> 20} MiB, {free >> 20} free"}
+        else:
+            start, share = _elapsed(), left / (len(tiers) - i)
+            blk = out[tier.key] = run(tier, start + share)
+            blk["clock_s"] = {"start": round(start), "share": round(share),
+                              "wall": round(_elapsed() - start)}
+    return out
+
 
 # Short query aliases for the compact stdout line (legend also in
 # BENCH_FULL.json). The driver stores only the LAST 2000 chars of
-# stdout and parses the JSON found there — r7/r8's full result lines
-# outgrew the window and landed `parsed: null`, so the full result now
-# goes to BENCH_FULL.json (committed, judge-readable) while stdout
-# carries a compact line engineered to fit the tail window.
+# stdout and parses the JSON found there, so the full result goes to
+# BENCH_FULL.json while stdout carries a compact line sized to fit.
 _SHORT = {
     "b_agg_groupby": "grp",
     "b_agg_groupby_served": "grpS",
@@ -693,24 +597,13 @@ _SHORT = {
     "b_mm_image_ahash": "ahash",
 }
 
-_TIER_TAGS = {
-    "scale_probe": "x30",
-    "scale_probe_deep": "x100",
-    "scale_probe_300": "x300",
-    "scale_probe_1000": "x1000",
-    "scale_probe_skew": "skew",
-    "scale_probe_retrieval": "retr",
-    "scale_probe_graph": "graph",
-    "scale_probe_mm": "mm",
-}
-
 
 def _compact(result: dict) -> str:
-    """Compress the full result into one JSON line ≤ ~1900 chars:
-    headline block verbatim (the driver's contract fields), per-tier
-    Spark times + DuckDB ratios + one-exchange floor under short query
-    aliases, spreads for the deep tiers, stream summary. Degrades by
-    dropping absolute times (ratios stay) if ever over budget."""
+    """Compress the full result into one JSON line ≤ 1900 chars:
+    headline block verbatim (the driver's contract fields), the host
+    size, per-tier Spark times + DuckDB ratios + one-exchange floor
+    under short query aliases, spreads for the deep tiers, stream
+    summary. Degrades by dropping detail if ever over budget."""
 
     def short(m: dict) -> dict:
         return {_SHORT.get(k, k): v for k, v in m.items()}
@@ -721,65 +614,58 @@ def _compact(result: dict) -> str:
                   "full_write_failed")
         if k in result
     }
+    if "host" in result:
+        out["host"] = {k: result["host"][k]
+                       for k in ("nproc", "mem_available_mb", "free_disk_mb")}
     scale: dict[str, dict] = {}
-    for key, tag in _TIER_TAGS.items():
-        blk = result.get(key)
-        if not isinstance(blk, dict):
+    for tier in TIERS:
+        blk = result.get(tier.key)
+        if blk is None:
             continue
-        if "queries" not in blk:
-            scale[tag] = blk  # {"skipped": ...}
-            continue
-        b: dict = {
-            "fl": blk.get("floor", {}).get("shuffle"),
-            "fr": blk.get("floor_ratio"),
-            "ld": blk.get("load"),
-            "s": short(blk["queries"]),
-            "r": short(blk.get("ratio_vs_duckdb", {})),
-        }
-        if blk.get("contended"):
-            b["contended"] = True
-        if blk.get("resettled"):
-            b["rs"] = [_SHORT.get(k, k) for k in blk["resettled"]]
-        if blk.get("trial_shed"):
-            b["ts"] = [_SHORT.get(k, k) for k in blk["trial_shed"]]
-        if tag in ("x300", "x1000") and "spread" in blk:
-            b["sp"] = short(blk["spread"])
-        scale[tag] = b
-    if scale:
-        out["scale"] = scale
-    sp = result.get("stream_probe")
-    if isinstance(sp, dict):
-        out["stream"] = (
-            sp
-            if "skipped" in sp
-            else {
-                "rps1": sp["rows_per_sec"],
-                "rpsMega": sp["rows_per_sec_megabatch"],
-                "rpsApp": sp.get("rows_per_sec_append"),
-                "rpsSock": sp.get("socket", {}).get("rows_per_sec"),
-                "sockSust": sp.get("socket_sustained", {}).get(
+        if "skipped" in blk:
+            (out if tier.action else scale)[tier.tag] = blk
+        elif tier.action:
+            out[tier.tag] = {
+                "rps1": blk["rows_per_sec"],
+                "rpsMega": blk["rows_per_sec_megabatch"],
+                "rpsApp": blk.get("rows_per_sec_append"),
+                "rpsSock": blk.get("socket", {}).get("rows_per_sec"),
+                "sockSust": blk.get("socket_sustained", {}).get(
                     "max_steady_batch_ms"
                 ),
-                "curve": sp.get("trigger_curve_sec"),
+                "curve": blk.get("trigger_curve_sec"),
             }
-        )
-    if scale:  # probe-off smoke runs don't (re)write the artifact
+        else:
+            b = {
+                "fl": blk.get("floor", {}).get("shuffle"),
+                "fr": blk.get("floor_ratio"),
+                "ld": blk.get("load"),
+                "s": short(blk["queries"]),
+                "r": short(blk.get("ratio_vs_duckdb", {})),
+            }
+            if blk.get("contended"):
+                b["contended"] = True
+            if blk.get("trial_shed"):
+                b["ts"] = [_SHORT.get(k, k) for k in blk["trial_shed"]]
+            if tier.tag in ("x300", "x1000") and "spread" in blk:
+                b["sp"] = short(blk["spread"])
+            scale[tier.tag] = b
+    if scale:
+        out["scale"] = scale
         out["full"] = "BENCH_FULL.json"
     # Degrade ladder, least-informative first: the loadavg (fr is the
-    # decision variable and the full artifact keeps both), then the
-    # per-block absolute floor (fr — the ratio — stays), then the
-    # spread columns, then absolute times (ratios + floor ratios
-    # carry the story), so a budget overrun sheds detail gradually
-    # instead of dropping every absolute time at once.  The "fl" rung
-    # is new in r15: the r14 driver line had to shed the absolute
-    # seconds ("s") — the most-read column — while eight copies of a
-    # floor reconstructible from fr × the headline floor rode along.
+    # decision variable), the absolute floor (fr × the headline floor
+    # rebuilds it), the spreads, absolute times (ratios carry the
+    # story), then the shed key lists become counts — BENCH_FULL.json
+    # keeps every field.
     line = json.dumps(out, separators=(",", ":"))
-    for field in ("ld", "fl", "sp", "s"):
+    for field in ("ld", "fl", "sp", "s", "ts"):
         if len(line) <= 1900:
             break
         for b in scale.values():
-            if isinstance(b, dict):
+            if field == "ts" and "ts" in b:
+                b["ts"] = len(b["ts"])
+            else:
                 b.pop(field, None)
         line = json.dumps(out, separators=(",", ":"))
     return line
@@ -787,24 +673,19 @@ def _compact(result: dict) -> str:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # The deep probe tiers cache multi-GiB corpora; the 8g default
-    # heap GC-throttles them (measured: multi-second pause spikes at
-    # 100×). The box has 128 GiB — size the single local JVM like the
-    # executor fleet it stands in for.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+    scale_root = os.path.join(REPO, ".scale")
+    host = stamp(scale_root)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or host["nproc"])
+    heap = os.environ.setdefault(
+        "SPARK_GRAFT_DRIVER_MEM", f"{driver_heap_mb(host['mem_available_mb'] << 20)}m"
+    )
     spark = get_spark("bench", cpus=cpus)
     tune_for_data_size(spark, sf_dir, cpus=cpus)
     specs = all_specs()
 
-    from stellarsql_spark.catalog import TABLES, load_table
-
-    # Base tier KEEPS df.cache() while the scale probes drop it — an
-    # A/B'd asymmetry (round 6): at sf0.1 the cache wins (headline sum
-    # 1.53 s cached vs 2.29 s direct — file-open/footer fixed costs
-    # dominate 17 MiB of data), while at the GiB tiers the
-    # InMemoryColumnar decode path loses 7× to the vectorized parquet
-    # scan (see probe()).
+    # The headline KEEPS df.cache() while the depth tiers drop it: at
+    # sf0.1 the cache wins (headline sum 1.53 s cached vs 2.29 s direct
+    # — file-open/footer fixed costs dominate 17 MiB of data).
     for t in TABLES:
         df = load_table(spark, sf_dir, t)
         df.cache()
@@ -821,291 +702,35 @@ def main() -> None:
         "queries": timings,
         "sf": sf_dir,
         "floor": _plan_floors(spark),
+        "host": {**host, "cpus": cpus, "driver_mem": heap},
     }
 
     if os.environ.get("SPARK_GRAFT_SCALE_PROBE", "1") != "0":
-        from stellarsql_spark.scale import ensure_scaled_corpus
-
-        def probe(factor: int, names, tables=None, scaled_dir=None,
-                  runs: int | None = None,
-                  deadline: float | None = None) -> dict:
-            if scaled_dir is None:
-                scaled_dir = ensure_scaled_corpus(spark, sf_dir, factor, tables=tables)
+        def run(tier: Tier, share_end: float) -> dict:
+            scaled_dir = tier.corpus.build(spark, sf_dir, tier.factor)
             tune_for_data_size(spark, scaled_dir, cpus=cpus)
-            tier_tables = tuple(
-                dict.fromkeys(
-                    t
-                    for name in names
-                    for t in _PROBE_TABLES.get(name, TABLES)
-                )
-            )
-            # Warm the OS page cache ONLY (one throwaway count per
-            # table) — no df.cache(): Spark's InMemoryColumnar read
-            # path measured 7× SLOWER than the vectorized parquet
-            # scan at 300× (Q1: 3.87 s cached vs 0.556 s direct,
-            # round 6), so caching at the data-dominated tiers
-            # benchmarks the cache, not the query. Reading parquet
-            # from the page cache is also engine-fair: it is exactly
-            # what the DuckDB timings get.
-            for t in tier_tables:
-                load_table(spark, scaled_dir, t).count()
-            # Per-block floor probe (r8 VERDICT #6): the no-exchange /
-            # one-exchange latency floors at THIS tier's confs, emitted
-            # inside the block so a contended driver run is self-evident
-            # (floors 3-10× the headline-session floors = contended host).
-            # Host-load witness (r9 VERDICT #3): each block also carries
-            # the 1-min loadavg at probe time and the block-floor /
-            # headline-floor ratio, so a reader can adjudicate
-            # contention vs regression from the artifact alone.
-            # Rejection rule (SCALE.md): floor_ratio > 1.5 ⇒ the block
-            # is re-probed once after a settle pause; if still > 1.5 it
-            # is recorded with "contended": true and SCALE.md's
-            # contract line must not cite it.  The bar was 2.0 through
-            # r10; the r10 driver artifact showed blocks at fr
-            # 1.83–1.93 whose ratios idle re-measures contradicted by
-            # 2-3× (tumB 10.12 vs 3.0 at 300×), so 2.0 was too loose to
-            # protect round-over-round comparison (r10 VERDICT #2).
-            # Idle-host runs measure fr 0.87–1.19, so 1.5 keeps honest
-            # blocks while rejecting the contaminated band.
-            block_floor = _plan_floors(spark)
-            base_shuffle = result["floor"]["shuffle"]
-            floor_ratio = round(block_floor["shuffle"] / max(base_shuffle, 1e-4), 2)
-            # The host-VM contention arrives in multi-minute waves (r11:
-            # two consecutive full runs caught one at the deepest tier,
-            # fr 1.64/1.86, while the same tier re-measured fr ≤1.2
-            # minutes later) — a single 15 s resettle cannot outlast a
-            # wave, so wait it out: up to three 60 s pauses before
-            # accepting the contended stamp.
-            global _RESETTLE_SLEEP
-            for _ in range(3):
-                if floor_ratio <= _FR_BAR:
-                    break
-                time.sleep(60)
-                _RESETTLE_SLEEP += 60.0
-                block_floor = _plan_floors(spark)
-                floor_ratio = round(
-                    block_floor["shuffle"] / max(base_shuffle, 1e-4), 2
-                )
-            # Deep tiers run min-of-5 with ENGINE-INTERLEAVED trials
-            # (see _interleaved_times): the host VM's throughput
-            # swings 3-4× between sessions, and interleaving is what
-            # keeps the cross-engine ratio meaningful under it.
-            # min-of-5 at 1000× (each trial round is ~a minute there;
-            # 7 rounds would double tier wall-clock for ~the same min).
-            if runs is None:
-                runs = (
-                    5 if factor >= 1000
-                    else 7 if factor >= 300
-                    else 5 if factor >= 100
-                    else 3
-                )
-            scaled, duck, spread, resettled, shed = _interleaved_times(
-                spark, scaled_dir, specs, names, runs,
-                spread_guard=factor >= 300,
-                deadline=deadline,
-            )
-            blk = {
-                "factor": factor,
-                "floor": block_floor,
-                "load": round(os.getloadavg()[0], 1),
-                "floor_ratio": floor_ratio,
-                "queries": scaled,
-                "spread": spread,
-                "time_ratio_vs_base": {
-                    k: round(scaled[k] / timings[k], 2)
-                    for k in scaled
-                    if k in timings
-                },
-                "duckdb": duck,
-                "ratio_vs_duckdb": {
-                    k: round(scaled[k] / duck[k], 2) for k in duck if duck[k] > 0
-                },
-            }
-            if resettled:
-                blk["resettled"] = resettled
-            if shed:
-                blk["trial_shed"] = shed
-            if floor_ratio > _FR_BAR:
-                blk["contended"] = True
-            return blk
+            if tier.action:
+                return tier.action(spark, scaled_dir, tier.factor)
+            return _probe(spark, scaled_dir, tier, share_end, result)
 
-        # time ratio per factor× data — factor means linear cost, ~1
-        # means the sf0.1 number was pure fixed overhead — plus the
-        # measured DuckDB latency on the SAME scaled corpus and the
-        # resulting Spark/DuckDB ratio at scale (the number
-        # BASELINE.md's matched rows give at 1×).
-        # Every probe's `deadline` below is the NEXT block's entry
-        # guard (r15): the entry guards stop a block starting too
-        # late; the deadline stops a wave-stalled block from eating
-        # the windows of the blocks behind it mid-trials (the adverse-
-        # window test run watched x1000 absorb ~28 min and starve
-        # stream/mm/graph).  Past the deadline the block sheds its
-        # REMAINING trials — warm + one paired trial per key always
-        # completes — and records itself under "trial_shed"/`ts`.  In
-        # any run that met the next guard the deadline never fired, so
-        # clean-run methodology (min-of counts) is unchanged.
-        result["scale_probe"] = probe(SCALE_FACTOR, SCALE_MATCHED, deadline=420)
-        # Soft wall-clock guard: a JSON line without the deep tier
-        # beats no JSON line at all if the harness enforces a timeout
-        # (first run per corpus regeneration pays ~2 min of one-off
-        # scaled-corpus builds on top of the timed work).
-        if _budget_elapsed() < 420:
-            result["scale_probe_deep"] = probe(SCALE2_FACTOR, SCALE2_MATCHED,
-                                               deadline=720)
-        else:
-            result["scale_probe_deep"] = {"skipped": "time budget"}
-        # 300× AQE-on tier: the permanent 100 TB-story block. First
-        # run per corpus regeneration pays a ~3.5 GiB one-off build
-        # (cached + fingerprinted after), so the guard is wider but
-        # still bounded — a JSON line without this block beats no
-        # JSON line.
-        if _budget_elapsed() < 720:
-            result["scale_probe_300"] = probe(SCALE3_FACTOR, SCALE3_MATCHED,
-                                              deadline=1080)
-        else:
-            result["scale_probe_300"] = {"skipped": "time budget"}
-        # 1000× tier: the deepest datapoint. First run per corpus
-        # regeneration pays a ~14 GiB one-off build (cached after);
-        # the guard keeps a budget-blown session emitting its JSON
-        # line without the tier rather than nothing at all.
-        if _budget_elapsed() < 1080:
-            result["scale_probe_1000"] = probe(
-                SCALE4_FACTOR, SCALE4_MATCHED, tables=SCALE4_TABLES,
-                deadline=1500,
-            )
-        else:
-            result["scale_probe_1000"] = {"skipped": "time budget"}
-        # Skew tier: same interleaved protocol, zipfian corpus. Runs
-        # after the uniform tiers so a blown budget drops the newest
-        # block first-but-one.
-        # Guards widened r11 (+180 s): the topk family joined the two
-        # deep tiers, adding ~3 min of timed trials ahead of these
-        # blocks — the old cutoffs silently dropped the retrieval tier.
-        if _budget_elapsed() < 1500:
-            from stellarsql_spark.scale import ensure_skewed_corpus
-
-            result["scale_probe_skew"] = probe(
-                SKEW_FACTOR,
-                SKEW_MATCHED,
-                scaled_dir=ensure_skewed_corpus(spark, sf_dir, SKEW_FACTOR),
-                deadline=1620,
-            )
-        else:
-            result["scale_probe_skew"] = {"skipped": "time budget"}
-        # Retrieval tier: BM25 over the 300× documents replica —
-        # reuses the sf0.1_x300 corpus the 300× tier just ensured,
-        # so the incremental cost is only the timed trials.
-        if _budget_elapsed() < 1620:
-            result["scale_probe_retrieval"] = probe(RETRIEVAL_FACTOR,
-                                                    RETRIEVAL_MATCHED,
-                                                    deadline=2100)
-        else:
-            result["scale_probe_retrieval"] = {"skipped": "time budget"}
-        # Streaming throughput probe (r8): every scale tier above is
-        # batch; this is the one measured micro-batch number. Drain
-        # the watermarked tumbling aggregate (b_stream_run_tumbling's
-        # plan) over the 100× events corpus through the file source,
-        # one file per trigger, so the run is genuinely incremental
-        # (~6 micro-batches updating (window, type) state).
-        # r15 (VERDICT #2): this block now runs BEFORE the graph tier
-        # — the r14 driver run lost the stream probe entirely because
-        # the graph tier (the longest block: 3 keys × min-of-7 with a
-        # spilly DuckDB twin) ran first and pushed elapsed past the
-        # old 2160 s guard.  The stream probe is ~3-4 min and is the
-        # ONLY sustained-socket / micro-batch evidence in the
-        # artifact, so it gets the cheap-first slot (the mm-tier
-        # precedent) and the graph tier absorbs the budget risk.
-        if _budget_elapsed() < 2100:
-            result["stream_probe"] = _stream_throughput(spark, sf_dir, SCALE2_FACTOR)
-            # Push-path twin (r9 VERDICT #7): the socket source's cost
-            # beside the file-source figure above.
-            result["stream_probe"]["socket"] = _socket_throughput(spark)
-            # Pinned-rate push contract (r14, VERDICT #5): the
-            # sustained_socket_drain harness at the contract rate —
-            # the artifact records worst steady batch / state bound so
-            # a regression in the single-reader path is visible here,
-            # not only in the unit test.
-            from stellarsql_spark.streaming.runtime import (
-                sustained_socket_drain,
-            )
-
-            rows = sustained_socket_drain(spark, rows_per_second=20_000,
-                                          min_batches=8, trigger_ms=1000)
-            steady = rows[2:] if len(rows) > 2 else rows
-            result["stream_probe"]["socket_sustained"] = (
-                {
-                    "rate_rps": 20_000,
-                    "batches": len(rows),
-                    "max_steady_batch_ms": max(
-                        (r["duration_ms"] for r in steady), default=None
-                    ),
-                    "max_state_rows": max(
-                        (r["state_rows"] for r in steady), default=None
-                    ),
-                }
-                if rows
-                else {"skipped": "feeder failed to bind"}
-            )
-        else:
-            result["stream_probe"] = {"skipped": "time budget"}
-        # Multimodal tier (r14 VERDICT #4): the codec family's depth
-        # row — rides the sf0.1_x300 corpus the 300× tier ensured, so
-        # the incremental cost is only the timed trials (~1 min).
-        # r15 ordering: stream BEFORE mm BEFORE graph, guards
-        # 2100/2400/2700.  The blocks' guards must be staggered wider
-        # than the earlier block's own duration or the earlier block
-        # starves the later one exactly when the budget is tight (the
-        # r15 shakeout run hit the inverse: mm's old 1700 guard
-        # skipped mm on a slow-floor host while the stream probe
-        # behind it still fit).  Stream goes first because it is the
-        # artifact's ONLY micro-batch/socket evidence (VERDICT r14
-        # #2); mm (~1 min) fits in the 2100→2400 window even when the
-        # stream probe starts at its deadline; graph (the longest)
-        # absorbs the residual risk, as before.
-        if _budget_elapsed() < 2400:
-            result["scale_probe_mm"] = probe(MM_FACTOR, MM_MATCHED, deadline=2700)
-        else:
-            result["scale_probe_mm"] = {"skipped": "time budget"}
-        # Graph tier (r12 VERDICT #2): the iterative loop at depth on
-        # the time-shifted corpus — see the GRAPH_MATCHED block
-        # comment. One-off build ~1.2 GiB (cached + fingerprinted).
-        # r15: runs LAST (it is the longest block and the stream probe
-        # must not starve behind it — see above) at min-of-5: each lpa
-        # trial pair is ~30 s, so two fewer rounds save ~2-3 min while
-        # the paired min-of protocol keeps absorbing the host waves.
-        if _budget_elapsed() < 2700:
-            from stellarsql_spark.scale import ensure_graph_corpus
-
-            result["scale_probe_graph"] = probe(
-                GRAPH_FACTOR,
-                GRAPH_MATCHED,
-                scaled_dir=ensure_graph_corpus(spark, sf_dir, GRAPH_FACTOR),
-                runs=5,
-            )
-        else:
-            result["scale_probe_graph"] = {"skipped": "time budget"}
+        result.update(run_tiers(TIERS, run, sf_dir, scale_root))
         tune_for_data_size(spark, sf_dir, cpus=cpus)
 
-    # Full result to disk only (committed artifact the judge reads);
-    # stdout carries ONLY the compact line, so the driver's 2000-char
-    # stdout tail holds exactly one complete, parseable JSON object —
-    # printing the full result first would leave nested-object
-    # fragments in the tail for a parser to trip over.  Probe-off /
-    # smoke runs (preflight, sf0.01 iteration) must NOT clobber the
-    # committed deep-tier artifact: only a run that carried the scale
-    # blocks owns BENCH_FULL.json.
+    # Full result to disk only; stdout carries ONLY the compact line, so
+    # the driver's 2000-char stdout tail holds exactly one parseable
+    # JSON object.  Probe-off / smoke runs must NOT clobber the
+    # committed depth-tier artifact: only a run with the tiers owns
+    # BENCH_FULL.json.
     full = dict(result)
     full["short_names"] = {v: k for k, v in _SHORT.items()}
     if "scale_probe" in result:
         try:
-            with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                   "BENCH_FULL.json"), "w") as f:
+            with open(os.path.join(REPO, "BENCH_FULL.json"), "w") as f:
                 json.dump(full, f, indent=1)
         except OSError as e:
             # A silently-failed write would leave a STALE committed
-            # artifact disagreeing with the compact stdout line the
-            # driver parses — warn loudly and flag the compact line so
-            # the divergence is detectable from either stream.
+            # artifact disagreeing with the compact stdout line — warn
+            # and flag the compact line so either stream shows it.
             print(f"WARNING: BENCH_FULL.json write failed: {e}", file=sys.stderr)
             result["full_write_failed"] = True
     print(_compact(result))

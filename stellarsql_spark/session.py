@@ -21,7 +21,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+# local[N] defaults to the CPUs this process may run on.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(app_name: str = "stellarsql_spark", cpus: int | None = None) -> SparkSession:

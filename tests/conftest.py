@@ -15,7 +15,7 @@ SF_MEDIUM = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("tests", cpus=4)
+    spark = get_spark("tests")
     yield spark
 
 

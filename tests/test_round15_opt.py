@@ -149,10 +149,13 @@ class TestReplicationBoundGuard:
         assert ok is not None
 
     def test_bench_factors_are_safe(self):
+        """Every bench tier's factor, read from its tier table, so a new
+        tier cannot bypass the packed-long bound."""
+        import bench
         from stellarsql_spark.scale import STRIDE
 
-        for factor in (30, 100, 300, 1000):
-            assert factor * STRIDE < 1 << 34
+        for tier in bench.TIERS:
+            assert tier.factor * STRIDE < 1 << 34
 
 
 class TestLpaPackedArgmax:
@@ -239,49 +242,89 @@ class TestLpaOraclePin:
 
 
 class TestBenchTrialShed:
-    """r15 bench trial-shed deadline (bench._interleaved_times): the
-    block-entry guards protect a block from starting late, but a block
-    that stalls mid-trials (one wave-stalled x1000 trial absorbed
-    506 s in the r15 adverse-window run) could still starve every
-    block behind it — the failure that cost the r14 driver artifact
-    its stream probe.  Past the deadline the block must stop STARTING
-    trials while still reporting an honest min for EVERY key, and
-    record the cut."""
+    """The bench scheduler: a tier may use (remaining budget) ÷
+    (remaining tiers) of ``bench.BUDGET_S``.  Past its share a tier
+    stops STARTING trials while every key still gets its warm run plus
+    one paired Spark/DuckDB trial, and the cut is recorded under
+    trial_shed.  No Spark and no real sleeps: the prepared callable is a
+    counter that advances a fake budget clock, so the exact number of
+    timed executions is asserted."""
 
-    NAMES = ["b_agg_groupby", "b_win_running_sum"]
+    NAMES = ["k1", "k2"]
 
-    def _run(self, spark, monkeypatch, deadline, elapsed):
+    def _interleave(self, monkeypatch, share_end):
+        from types import SimpleNamespace
+
         import bench
 
-        monkeypatch.setattr(bench, "_budget_elapsed", lambda: elapsed)
-        from stellarsql_spark.registry import all_specs
+        clock = [0.0]
+        calls = dict.fromkeys(self.NAMES, 0)
 
-        return bench._interleaved_times(
-            spark, SF_SMALL, all_specs(), self.NAMES, runs=3,
-            deadline=deadline,
-        )
+        def counting_prepare(spec, spark, sf_dir):
+            def execute():
+                calls[spec.name] += 1
+                clock[0] += 10.0
 
-    def test_past_deadline_sheds_but_reports_every_key(
-        self, spark, monkeypatch
-    ):
-        s, d, spread, resettled, shed = self._run(
-            spark, monkeypatch, deadline=100.0, elapsed=200.0
+            return execute
+
+        monkeypatch.setattr(bench, "prepare", counting_prepare)
+        monkeypatch.setattr(bench, "_elapsed", lambda: clock[0])
+        specs = {
+            n: SimpleNamespace(name=n, oracle="SELECT 42", tags=())
+            for n in self.NAMES
+        }
+        s, d, spread, shed = bench._interleaved_times(
+            None, SF_SMALL, specs, self.NAMES, 3, share_end
         )
-        # every remaining query was cut AFTER its first paired trial
-        assert shed == self.NAMES
-        assert resettled == []
         for n in self.NAMES:
-            assert 0.0 < s[n] < float("inf")   # min-of-1 still reported
-            assert spread[n] == 0.0            # exactly one timed trial
-            assert 0.0 < d[n] < float("inf")   # the paired duck trial ran
+            assert 0.0 <= s[n] < float("inf")   # every key reports a min
+            assert 0.0 <= d[n] < float("inf")   # its paired duck trial ran
+        return calls, shed
 
-    def test_no_deadline_keeps_full_trial_counts(self, spark, monkeypatch):
-        s, d, spread, resettled, shed = self._run(
-            spark, monkeypatch, deadline=None, elapsed=200.0
-        )
-        assert shed == []                      # deadline off → no cut
-        for n in self.NAMES:
-            assert 0.0 < s[n] < float("inf")
+    def test_no_budget_pressure_keeps_full_min_of_n(self, monkeypatch):
+        import bench
+
+        calls, shed = self._interleave(monkeypatch, share_end=None)
+        # warm + min-of-(3 + the sub-second extension) for every key
+        full = 1 + 3 + bench._SUBSEC_EXTRA
+        assert calls == {"k1": full, "k2": full}
+        assert shed == []
+
+    def test_budget_out_between_keys_sheds_later_keys(self, monkeypatch):
+        import bench
+
+        # k1 runs warm + 5 trials (clock 10..60) and crosses the share's
+        # end at 55 on its last trial; k2 starts past it.
+        calls, shed = self._interleave(monkeypatch, share_end=55.0)
+        assert calls == {"k1": 1 + 3 + bench._SUBSEC_EXTRA, "k2": 1 + 1}
+        assert shed == ["k2"]
+
+    def test_tier_with_no_budget_left_is_skipped(self, monkeypatch, tmp_path):
+        import bench
+
+        clock = [bench.BUDGET_S - 90.0]
+        monkeypatch.setattr(bench, "_elapsed", lambda: clock[0])
+        tiers = [
+            bench.TIERS[0]._replace(key=f"t{i}", factor=1) for i in range(3)
+        ]
+        ran = []
+
+        def run(tier, share_end):
+            ran.append((tier.key, share_end))
+            clock[0] += 100.0  # overruns the whole remaining budget
+            return {"queries": {}}
+
+        out = bench.run_tiers(tiers, run, SF_SMALL, str(tmp_path))
+        # the first tier's share is 90 s ÷ 3 tiers
+        assert ran == [("t0", bench.BUDGET_S - 60.0)]
+        assert out == {
+            "t0": {
+                "queries": {},
+                "clock_s": {"start": bench.BUDGET_S - 90, "share": 30, "wall": 100},
+            },
+            "t1": {"skipped": "time budget"},
+            "t2": {"skipped": "time budget"},
+        }
 
     def test_compact_line_carries_ts(self):
         import bench

@@ -15,7 +15,8 @@ One command that runs, in order:
      any red here becomes a driver red;
   2. the vanilla-session driver contract (entry + a spot-check that
      every queries() callable builds against a conf-less session);
-  3. a bench smoke at sf0.01 with the scale probe off (~40 s);
+  3. a bench smoke at sf0.01 with the scale probe off (~40 s); its
+     last stdout line must parse as JSON and fit in 2000 chars;
   4. the whole-registry 1part plan gate (~2 min, plan compile only):
      any query whose `Exchange SinglePartition` count exceeds its
      allowlisted bounded-intermediate entry (tools/
@@ -33,6 +34,7 @@ Full-surface certification is still `python tools/check_oracle.py`
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import subprocess
 import sys
@@ -123,9 +125,22 @@ def main() -> int:
 
     print("[3/5] bench smoke (sf0.01, probe off)")
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=args.sf, SPARK_GRAFT_SCALE_PROBE="0")
-    r = subprocess.run([sys.executable, os.path.join(REPO, "bench.py")], cwd=REPO, env=env)
+    r = subprocess.run([sys.executable, os.path.join(REPO, "bench.py")], cwd=REPO,
+                       env=env, stdout=subprocess.PIPE, text=True)
+    print(r.stdout, end="")
     if r.returncode != 0:
         print("PREFLIGHT FAILED: bench smoke")
+        return 1
+    # The driver keeps the last 2000 chars of stdout and parses the JSON
+    # there: the last line must parse and fit the window on its own.
+    last = (r.stdout.strip().splitlines() or [""])[-1]
+    try:
+        json.loads(last)
+    except ValueError:
+        print("PREFLIGHT FAILED: bench's last stdout line is not JSON")
+        return 1
+    if len(last) > 2000:
+        print(f"PREFLIGHT FAILED: bench's last stdout line is {len(last)} chars (> 2000)")
         return 1
 
     print("[4/5] 1part plan gate (whole registry)")
