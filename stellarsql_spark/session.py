@@ -13,6 +13,10 @@ Scale notes (100 TB / 1000-executor design intent):
   so a cluster deploy would raise it to 2-3× total cores.
 - Session timezone pinned to UTC so timestamp semantics match the
   DuckDB oracle (UTC-naive) and are cluster-invariant.
+- Streaming checkpoints go through Spark's FileSystem-based checkpoint
+  manager, not the FileContext-based default: on a local filesystem
+  without ``libhadoop`` the default forks ``chmod``/``readlink`` for
+  every offset, commit, state-delta and checksum file.
 """
 
 from __future__ import annotations
@@ -43,6 +47,17 @@ def get_spark(app_name: str = "stellarsql_spark", cpus: int | None = None) -> Sp
         # BENCH artifacts were head-truncated to unparseable)
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # local[N] sessions keep their streaming checkpoints on file:.
+        # There the FileSystem-based manager keeps the default's commit
+        # guard (fail if the target exists, then a POSIX rename(2)) but
+        # skips FileContext's getFileLinkStatus and setPermission, which
+        # without libhadoop run readlink/chmod as child processes: about
+        # 250 forks per micro-batch across the offset and commit logs,
+        # the file-sink metadata log, state deltas and their checksums.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+        )
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")

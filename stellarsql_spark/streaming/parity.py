@@ -35,6 +35,7 @@ from stellarsql_spark.streaming.runtime import (
     EVENTS_DDL,
     events_stream,
     run_to_memory,
+    stream_shuffle_partitions,
     stream_static_join,
     stream_stream_join,
 )
@@ -709,10 +710,8 @@ def b_stream_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = events_stream(spark, sf_dir)
     counts = ev.groupBy("event_type").agg(F.count("*").alias("n"))
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     name = f"progress_{_uuid.uuid4().hex[:12]}"
-    try:
+    with stream_shuffle_partitions(spark):
         q = (
             counts.writeStream.outputMode("complete")
             .format("memory")
@@ -724,11 +723,6 @@ def b_stream_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
             progress = q.recentProgress
         finally:
             q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     input_rows = sum(p["numInputRows"] for p in progress)
     state_rows = max(
         (op["numRowsTotal"] for p in progress for op in p.get("stateOperators", [])),
@@ -934,8 +928,6 @@ def b_stream_restart_recovery(
     ckpt = os.path.join(work, "ckpt")
     os.makedirs(src_dir)
     sink = f"restart_sink_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     def _stage(names) -> None:
         # hardlinks share the quartile files' pinned strictly-increasing
@@ -964,22 +956,19 @@ def b_stream_restart_recovery(
             q.stop()
 
     try:
-        _stage(files[:2])
-        _drain()  # phase 1: two micro-batches, then the query DIES
-        if _probe is not None:
-            _probe(1, ckpt)
-        _stage(files[2:])
-        _drain()  # phase 2: new query object, same checkpoint
-        if _probe is not None:
-            _probe(2, ckpt)
+        with stream_shuffle_partitions(spark):
+            _stage(files[:2])
+            _drain()  # phase 1: two micro-batches, then the query DIES
+            if _probe is not None:
+                _probe(1, ckpt)
+            _stage(files[2:])
+            _drain()  # phase 2: new query object, same checkpoint
+            if _probe is not None:
+                _probe(2, ckpt)
         # the memory sink table outlives the stopped query and does not
         # depend on the checkpoint, so the finally's rmtree is safe
         return spark.table(sink)
     finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(work, ignore_errors=True)
 
 
@@ -1048,8 +1037,6 @@ def b_stream_concurrent(
     ckpt_a, ckpt_b = os.path.join(work, "ckpt_a"), os.path.join(work, "ckpt_b")
     sink_a = f"conc_tumbling_{uuid.uuid4().hex[:8]}"
     sink_b = f"conc_peruser_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     def _start(df, sink, ckpt):
         return (
@@ -1065,15 +1052,16 @@ def b_stream_concurrent(
     )
     qa = qb = None
     try:
-        qa = _start(tumbling_hourly(src.withWatermark("ts", "2 hours")), sink_a, ckpt_a)
-        qb = _start(
-            src.groupBy("user_id").agg(F.count("*").alias("n_events")),
-            sink_b,
-            ckpt_b,
-        )
-        # both queries are live before either drain begins
-        qa.processAllAvailable()
-        qb.processAllAvailable()
+        with stream_shuffle_partitions(spark):
+            qa = _start(tumbling_hourly(src.withWatermark("ts", "2 hours")), sink_a, ckpt_a)
+            qb = _start(
+                src.groupBy("user_id").agg(F.count("*").alias("n_events")),
+                sink_b,
+                ckpt_b,
+            )
+            # both queries are live before either drain begins
+            qa.processAllAvailable()
+            qb.processAllAvailable()
         if _probe is not None:
             _probe(ckpt_a, ckpt_b)
         a = spark.table(sink_a).select(
@@ -1095,8 +1083,4 @@ def b_stream_concurrent(
         for q in (qa, qb):
             if q is not None:
                 q.stop()
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(work, ignore_errors=True)

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import os
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,21 +87,38 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@contextmanager
+def stream_shuffle_partitions(spark: SparkSession):
+    """Pin ``spark.sql.shuffle.partitions`` to 32 for the streaming
+    queries started inside the block, then restore the caller's value
+    (or unset it).
+
+    The state-store partition count is fixed by this conf when a
+    checkpoint is first created, so it is pinned here rather than
+    inherited: the session default is ``max(cpus, 8)``,
+    ``tune_for_data_size`` resizes it per corpus, and a vanilla
+    session (the driver harness's) carries 200, which made a one-batch
+    sf0.001 drain take 4.3-4.5 s against 1.1-1.6 s at 32 (4 cores).
+    Restoring it keeps batch plans built later from inheriting a
+    streaming-sized shuffle count (plan shapes must not depend on
+    whether a streaming key ran first in the session)."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.sql.shuffle.partitions")
+        else:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def run_to_memory(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Drain a streaming DataFrame synchronously into a memory sink and
     return the sink contents as a batch DataFrame."""
-    # State-store partition count is fixed at the first checkpoint by
-    # shuffle.partitions; a vanilla 200 costs ~5-45s per drain on
-    # local test data. 32 matches the engine session default and the
-    # local core count. The previous value is RESTORED after the drain
-    # so batch plans built later don't inherit a streaming-sized
-    # shuffle count (plan shapes must not depend on whether a
-    # streaming key ran first in the session).
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     name = f"sink_{uuid.uuid4().hex[:12]}"
-    try:
+    with stream_shuffle_partitions(spark):
         q = (
             stream_df.writeStream.outputMode(output_mode)
             .format("memory")
@@ -111,12 +129,7 @@ def run_to_memory(stream_df: DataFrame, output_mode: str = "complete") -> DataFr
             q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return stream_df.sparkSession.table(name)
+    return spark.table(name)
 
 
 def tumbling_with_watermark(spark: SparkSession, sf_dir: str, watermark: str = "2 hours") -> DataFrame:

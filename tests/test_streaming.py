@@ -4,6 +4,8 @@ sink + processAllAvailable, cross-checked against their batch form."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from stellarsql_spark.catalog import load_table
@@ -113,6 +115,111 @@ def test_checkpoint_restart_is_exactly_once(spark, sf_dir, tmp_path):
     second = checkpointed_file_sink(spark, sf_dir, out, ckpt)
     assert first == n_src
     assert second == n_src
+
+
+_FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+
+
+def test_engine_checkpoints_use_filesystem_manager(spark, tmp_path):
+    """A file: checkpoint in an engine session resolves to Spark's
+    FileSystem-based manager, whose writes still go through Hadoop's
+    checksummed local filesystem (a ``.crc`` sidecar per file), and
+    Spark's own checkpoint checksums stay on."""
+    jvm = spark._jvm
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    root = jvm.org.apache.hadoop.fs.Path(tmp_path.as_uri())
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        root, hconf
+    )
+    assert mgr.getClass().getName() == _FS_MANAGER
+    out = mgr.createAtomic(jvm.org.apache.hadoop.fs.Path(root, "probe"), False)
+    out.write(bytearray(b"probe"))
+    out.close()
+    assert (tmp_path / "probe").read_bytes() == b"probe"
+    assert (tmp_path / ".probe.crc").is_file()
+    assert spark.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "true"
+
+
+def test_watermarked_parquet_sink_checkpoint(spark, sf_dir, tmp_path):
+    """Three event files, one per micro-batch, through the watermarked
+    hourly window into a checkpointed parquet sink: the sink equals
+    DuckDB's aggregate over the closed windows, and the checkpoint
+    holds every log and integrity file Spark writes on this path."""
+    import time
+    from datetime import datetime
+
+    import duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from stellarsql_spark.catalog import table_path
+
+    events = pq.read_table(table_path(sf_dir, "events"))
+    events = events.take(pc.sort_indices(events, [("ts", "ascending")]))
+    src = tmp_path / "src"
+    src.mkdir()
+    third = -(-events.num_rows // 3)
+    mtime = time.time() - 60
+    for i in range(3):
+        f = src / f"part-{i}.parquet"
+        pq.write_table(events.slice(i * third, third), f)
+        os.utime(f, (mtime + i, mtime + i))  # source order is mtime order
+
+    sink, ckpt = tmp_path / "sink", tmp_path / "ckpt"
+    stream = runtime.events_stream_from_dir(spark, str(src), max_files_per_trigger=1)
+    q = (
+        tumbling_hourly(stream.withWatermark("ts", "2 hours"))
+        .writeStream.format("parquet")
+        .option("path", str(sink))
+        .option("checkpointLocation", str(ckpt))
+        .outputMode("append")
+        .start()
+    )
+    max_ts = pc.max(events["ts"]).cast("int64").as_py()  # epoch µs
+    final_wm_ms = max_ts // 1000 - 2 * 3600 * 1000
+    try:
+        q.processAllAvailable()
+        # the no-data batch that follows the last file closes the last windows
+        deadline = time.monotonic() + 60
+        while time.monotonic() < deadline:
+            wm = ((q.lastProgress or {}).get("eventTime") or {}).get("watermark")
+            if wm and datetime.fromisoformat(wm.replace("Z", "+00:00")).timestamp() * 1000 >= final_wm_ms:
+                break
+            time.sleep(0.1)
+    finally:
+        q.stop()
+
+    con = duckdb.connect()
+    expected = con.execute(f"""
+        SELECT epoch_us(date_trunc('hour', ts)) AS w, event_type, COUNT(*) AS n,
+               CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS v
+        FROM read_parquet('{src}/*.parquet')
+        GROUP BY 1, 2
+        HAVING epoch_us(date_trunc('hour', ts)) + 3600000000 <= {final_wm_ms * 1000}
+        ORDER BY 1, 2""").fetchall()
+    got = con.execute(f"""
+        SELECT epoch_us(window_start), event_type, n_events, total_value
+        FROM read_parquet('{sink}/*.parquet') ORDER BY 1, 2""").fetchall()
+    con.close()
+    assert len(expected) > 0
+    assert got == expected
+
+    def tree(d):
+        return {p.relative_to(d).as_posix() for p in d.rglob("*") if p.is_file()}
+
+    files = tree(ckpt)
+    for log in ("offsets", "commits"):
+        assert {f"{log}/{i}" for i in range(3)} <= files
+        assert {f"{log}/.{i}.crc" for i in range(3)} <= files  # Hadoop's checksum sidecars
+    deltas = {n for n in files if n.startswith("state/") and n.endswith(".delta")}
+    assert deltas
+    for n in deltas:
+        d, f = n.rsplit("/", 1)
+        assert n + ".crc" in files  # Spark's checkpoint checksum
+        assert f"{d}/.{f}.crc" in files  # Hadoop's sidecar of N.delta
+    assert "_spark_metadata/0" in tree(sink)
 
 
 def _batch_event_counts(spark, sf_dir):
