@@ -15,7 +15,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from stellarsql_spark.registry import all_specs, driver_key_order
+from stellarsql_spark.registry import all_specs
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -36,11 +36,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return run
 
-    specs = all_specs()
-    return {name: _wrap(specs[name].builder) for name in driver_key_order()}
+    return {name: _wrap(spec.builder) for name, spec in all_specs().items()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable oracle SQL per query key (omitted → rows-only)."""
-    specs = all_specs()
-    return {name: specs[name].oracle for name in driver_key_order() if specs[name].oracle is not None}
+    return {name: spec.oracle for name, spec in all_specs().items() if spec.oracle is not None}

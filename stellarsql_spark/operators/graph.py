@@ -1263,30 +1263,17 @@ def _lpa_labels(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
     """(edges, final (node, lbl) assignment) of the LP_ITERS-round
     synchronous LPA over the minute-granular graph — shared by C266
     (community sizes) and C270 (modularity of those communities)."""
-    from pyspark.sql import Window
-
     edges = _minute_edges(spark, sf_dir)
     bidir = edges.select("u", "v").unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
     # round 1: a node's neighbor labels ARE the neighbor ids
-    votes = bidir.select(F.col("u").alias("node"), F.col("v").alias("lbl"))
-    w = Window.partitionBy("node").orderBy(F.col("n").desc(), F.col("lbl"))
-    labels = None
-    for it in range(LP_ITERS):
-        mode = (
-            votes.groupBy("node", "lbl")
-            .agg(F.count("*").alias("n"))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("node", "lbl")
-        )
-        if it == LP_ITERS - 1:
-            labels = mode
-            break
+    labels = _lpa_argmax(bidir.select(F.col("u").alias("node"), F.col("v").alias("lbl")))
+    for _ in range(LP_ITERS - 1):
         votes = bidir.join(
-            mode.select(F.col("node").alias("v"), "lbl"), "v"
+            labels.select(F.col("node").alias("v"), "lbl"), "v"
         ).select(F.col("u").alias("node"), "lbl")
+        labels = _lpa_argmax(votes)
     return edges, labels
 
 

@@ -450,21 +450,17 @@ def duck():
 
 
 def _round_seed(base: int) -> int:
-    """Rotate the fuzz seed per driver round (one CORRECTNESS_r*.json
-    lands per round), so every round explores fresh query space while
-    any single round stays fully reproducible — a failure's seed is
-    recoverable from the repo state that produced it."""
-    import glob
+    """Fixed fuzz seed per test, so every run explores the same query
+    space and a failure reproduces from the repo state alone.  The
+    ``101 * 14`` shift pins the seeds these tests have used since 14
+    rounds of correctness records were on file."""
     import os
 
-    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    n_rounds = len(glob.glob(os.path.join(here, "CORRECTNESS_r*.json")))
-    # SPARK_GRAFT_FUZZ_OFFSET: extra-sweep hook — in-round re-runs set
-    # 1, 2, ... to explore fresh seed space beyond the per-round
-    # rotation while each sweep stays reproducible from (repo state,
-    # offset).
+    # SPARK_GRAFT_FUZZ_OFFSET: extra-sweep hook — re-runs set 1, 2, ...
+    # to explore fresh seed space while each sweep stays reproducible
+    # from (repo state, offset).
     offset = int(os.environ.get("SPARK_GRAFT_FUZZ_OFFSET", "0"))
-    return base + 101 * n_rounds + offset
+    return base + 101 * 14 + offset
 
 
 def test_differential_corpus(spark, duck):

@@ -1,5 +1,5 @@
-"""Round-2 component tests: vendored codecs, LSH banding, driver key
-ordering, and the quality/layout operators."""
+"""Round-2 component tests: vendored codecs, LSH banding, and the
+quality/layout operators."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ from stellarsql_spark.pipeline.multimodal import (
     _wav_decode,
     _wav_encode,
 )
-from stellarsql_spark.registry import _RESTAMP, _driver_stamped, all_specs, driver_key_order
 
 SF = "/root/testdata/sf0.001"
 
@@ -108,54 +107,6 @@ class TestLshBanding:
         two = {r.vec_id: list(r.band_sigs) for r in with_band_sigs(e).collect()}
         assert one == two
         assert all(len(v) == N_BANDS for v in one.values())
-
-
-class TestDriverOrder:
-    def test_covers_all_keys_once(self):
-        order = driver_key_order()
-        assert sorted(order) == sorted(all_specs())
-
-    def test_never_stamped_keys_lead(self):
-        """Every key the driver has never green-stamped must precede
-        every stamped key (restamp block excepted), so a truncated
-        driver run always produces new evidence.  In the terminal
-        state (every key stamped) the property is vacuous — assert
-        the terminal invariant instead of crashing on max([])."""
-        order = driver_key_order()
-        stamped = _driver_stamped()
-        never = [i for i, k in enumerate(order) if k not in stamped]
-        if not never:
-            # Terminal state: restamp block plus stamps cover the world.
-            assert set(_RESTAMP) | set(stamped) >= set(order)
-            return
-        first_stamped = min(
-            i for i, k in enumerate(order) if k in stamped and k not in _RESTAMP
-        )
-        assert max(never) < first_stamped
-        # and the restamp block leads even the never-stamped keys
-        if _RESTAMP:
-            assert min(never) >= len([k for k in _RESTAMP if k in order])
-
-    def test_restamp_keys_lead(self):
-        """r8: the restamp block LEADS the order — changed-contract
-        keys with misleading stale stamps must never be squeezed out
-        of the window by a large batch of new keys."""
-        order = driver_key_order()
-        restamp_pos = [order.index(k) for k in _RESTAMP]
-        assert restamp_pos == list(range(len(_RESTAMP)))
-
-    def test_prefix_spans_categories(self):
-        """Any 50-key prefix must touch every module family that still
-        has never-stamped keys (the round-robin interleave guarantee —
-        a truncated driver run spans categories, not one module)."""
-        specs = all_specs()
-        stamped = _driver_stamped()
-        pending_mods = {
-            specs[k].builder.__module__ for k in specs if k not in stamped
-        }
-        prefix_mods = {specs[k].builder.__module__ for k in driver_key_order()[:50]}
-        missing = pending_mods - prefix_mods
-        assert not missing, f"pending modules absent from driver prefix: {missing}"
 
 
 class TestQualityAndLayout:

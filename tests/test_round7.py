@@ -253,32 +253,18 @@ class TestAdversarialCorpus:
         "b_llm_canonicalize",
     ]
 
-    @staticmethod
-    def _checker():
-        import importlib.util
-
-        spec = importlib.util.spec_from_file_location(
-            "check_oracle", os.path.join(REPO, "tools", "check_oracle.py")
-        )
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        return mod
-
     def test_hostile_docs_match_oracle(self, spark):
         from tools.adversarial_corpus import build
+        from tools.check_oracle import check_key, duck_connection
 
         from stellarsql_spark.registry import all_specs
 
-        chk = self._checker()
         sf = build()
-        con = chk.duck_connection(sf)
+        con = duck_connection(sf)
         specs = all_specs()
         failures = {}
         for key in self.KEYS:
-            spec = specs[key]
-            sdf = spec.builder(spark, sf).toPandas()
-            ddf = con.execute(spec.oracle).df()
-            problems = chk.compare(key, sdf, ddf)
+            problems = check_key(spark, con, specs[key], sf)
             if problems:
                 failures[key] = problems
         assert not failures, failures

@@ -2,7 +2,13 @@
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as entrymod
+from stellarsql_spark.registry import all_specs
+from tools.check_oracle import check_key, duck_connection
+
+SPECS = all_specs()
 
 
 def test_entry_returns_rows(spark):
@@ -15,17 +21,21 @@ def test_entry_returns_rows(spark):
 def test_queries_and_oracles_align(spark):
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    assert len(qs) >= 60
-    assert set(oracles) <= set(qs)
+    assert list(qs) == list(SPECS)
+    assert list(oracles) == [k for k, s in SPECS.items() if s.oracle is not None]
     # every oracle is a non-empty SQL string
     assert all(isinstance(s, str) and "SELECT" in s.upper() for s in oracles.values())
 
 
-def test_every_query_runs_at_smallest_sf(spark, sf_dir):
-    failures = {}
-    for name, fn in entrymod.queries().items():
-        try:
-            fn(spark, sf_dir).limit(1).collect()
-        except Exception as e:  # noqa: BLE001
-            failures[name] = repr(e)[:200]
-    assert not failures, failures
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    con = duck_connection(sf_dir)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("key", list(SPECS))
+def test_key_matches_oracle(spark, duck, sf_dir, key):
+    """The key's Spark result equals its DuckDB oracle (exact, typed
+    compare); a rows-only key has to run to completion."""
+    assert check_key(spark, duck, SPECS[key], sf_dir) == []

@@ -1,10 +1,14 @@
-"""Local replica of the driver's correctness gate.
+"""The Spark-vs-DuckDB correctness gate.
 
 Runs every registry query on Spark and its oracle on DuckDB over the
 same parquet tables, then compares row count, column names, and
 values (columns sorted by name, rows sorted by all columns, exact
 equality — at least as strict as the driver's order-insensitive
-value-hash).
+value-hash).  A rows-only key (no oracle) only has to run.
+
+``check_key`` is the per-key check; this CLI loops it over the
+registry, and Tier-1 (``tests/test_smoke.py``) runs it once per key
+at sf0.001.
 
 Usage:
     python tools/check_oracle.py [--sf /root/testdata/sf0.01] [keys...]
@@ -17,6 +21,7 @@ import os
 import sys
 import time
 import traceback
+from dataclasses import replace
 
 import duckdb
 import numpy as np
@@ -25,8 +30,8 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from stellarsql_spark.catalog import TABLES, table_path  # noqa: E402
-from stellarsql_spark.registry import all_specs  # noqa: E402
-from stellarsql_spark.session import get_spark  # noqa: E402
+from stellarsql_spark.registry import QuerySpec, all_specs  # noqa: E402
+from stellarsql_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -142,6 +147,16 @@ def compare(name: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[st
     return problems
 
 
+def check_key(spark, con: duckdb.DuckDBPyConnection, spec: QuerySpec, sf_dir: str) -> list[str]:
+    """Problems with one registry key: its builder runs to pandas and,
+    unless the key is rows-only, must equal its oracle run on ``con``.
+    A raise on either engine propagates."""
+    sdf = spec.builder(spark, sf_dir).toPandas()
+    if spec.oracle is None:
+        return []
+    return compare(spec.name, sdf, con.execute(spec.oracle).df())
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -161,12 +176,11 @@ def main() -> int:
 
         import __spark_entry__ as entry_mod
 
-        spark = SparkSession.builder.master("local[8]").appName("oracle_vanilla").getOrCreate()
+        spark = (
+            SparkSession.builder.master(f"local[{DEFAULT_CPUS}]").appName("oracle_vanilla").getOrCreate()
+        )
         wrapped = entry_mod.queries()
-        specs = {
-            k: type(s)(name=s.name, builder=wrapped[k], oracle=s.oracle, tags=s.tags, doc=s.doc)
-            for k, s in specs.items()
-        }
+        specs = {k: replace(s, builder=wrapped[k]) for k, s in specs.items()}
     else:
         spark = get_spark("oracle_check")
     con = duck_connection(args.sf)
@@ -176,32 +190,21 @@ def main() -> int:
         spec = specs[key]
         t0 = time.time()
         try:
-            sdf = spec.builder(spark, args.sf).toPandas()
+            problems = check_key(spark, con, spec, args.sf)
         except Exception:
-            print(f"FAIL {key}: spark raised\n{traceback.format_exc()}")
-            n_fail += 1
-            continue
-        if spec.oracle is None:
-            print(f"rows {key}: {len(sdf)} rows ({time.time() - t0:.1f}s) [rows-only]")
-            n_rows_only += 1
-            if len(sdf) == 0:
-                print(f"  WARNING {key}: 0 rows from a rows-only query")
-            continue
-        try:
-            ddf = con.execute(spec.oracle).df()
-        except Exception:
-            print(f"FAIL {key}: duckdb raised\n{traceback.format_exc()}")
-            n_fail += 1
-            continue
-        problems = compare(key, sdf, ddf)
+            problems = [traceback.format_exc()]
+        took = f"{time.time() - t0:.1f}s"
         if problems:
             n_fail += 1
-            print(f"FAIL {key} ({time.time() - t0:.1f}s):")
+            print(f"FAIL {key} ({took}):")
             for p in problems:
                 print(f"  {p}")
+        elif spec.oracle is None:
+            n_rows_only += 1
+            print(f"rows {key} ({took}) [rows-only]")
         else:
             n_pass += 1
-            print(f"ok   {key}: {len(sdf)} rows ({time.time() - t0:.1f}s)")
+            print(f"ok   {key} ({took})")
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
     return 1 if n_fail else 0
 
