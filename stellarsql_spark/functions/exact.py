@@ -76,21 +76,56 @@ def sql_davg(col: str) -> str:
 # --- integer-cents representation: the hot-path alternative ---------
 #
 # For a 2-decimal money double, round(x*100) is its exact integer cent
-# count (the 2-decimal value times 100 is an integer; the double's
+# count: the 2-decimal value times 100 is an integer, and the double's
 # representation error is ~1e-12, nowhere near the .5 rounding
-# boundary), and both engines execute the identical IEEE multiply +
-# half-up round, so cent longs are bit-identical cross-engine just
-# like decimal casts — but SUM(BIGINT) aggregates 2-4× faster than
-# SUM(DECIMAL>18) in Spark (long adds in codegen vs Decimal objects),
-# which matters on pre-aggregations with millions of groups. The final
-# /100.0 is exact while the cent total stays under 2^53 (a per-group
-# revenue of 90 trillion dollars; raise to decimal if you have that).
+# boundary. The engines do not round alike in general — Spark's
+# ``round`` (which ``cents`` reproduces) rounds the ``Double.toString``
+# decimal of x*100 half-up through a BigDecimal, DuckDB's ROUND rounds
+# the binary double half away from zero — but on exact 2-decimal
+# inputs both land on that integer, so cent longs are bit-identical
+# cross-engine just like decimal casts. SUM(BIGINT) aggregates 2-4×
+# faster than SUM(DECIMAL>18) in Spark (long adds in codegen vs
+# Decimal objects), which matters on pre-aggregations with millions of
+# groups. The final /100.0 is exact while the cent total stays under
+# 2^53 (a per-group revenue of 90 trillion dollars; raise to decimal
+# if you have that).
+
+
+def round_half_up(y: Column) -> Column:
+    """Spark's ``round(y)`` (scale 0) on a double without its per-row
+    BigDecimal; ``cents`` says why the two are equal."""
+    r = F.rint(y)
+    return F.when(F.abs(y - r) == 0.5, F.round(y)).otherwise(r)
 
 
 def cents(col: str | Column) -> Column:
-    """Exact integer-cents BIGINT view of a 2-decimal money double."""
+    """Exact integer-cents BIGINT view of a 2-decimal money double.
+
+    The value is ``CAST(round(x * 100) AS BIGINT)`` for every double.
+    Spark evaluates ``round(double)`` as
+    ``BigDecimal.valueOf(y).setScale(0, HALF_UP).doubleValue()``: one
+    ``Double.toString`` and one BigDecimal per row. ``round_half_up``
+    instead returns ``rint(y)`` (round half to even, a plain double op)
+    and hands only the exact ties ``|y - rint(y)| == 0.5`` to ``round``.
+    The results are the same:
+
+    - ``Double.toString(y)`` parses back to ``y``, so its decimal lies
+      in ``y``'s rounding interval.
+    - For ``|y| < 2^52`` every ``k + 0.5`` is itself a double, so that
+      interval holds no such tie unless ``y`` is one. Half-up on the
+      decimal and nearest on ``y`` then pick the same integer, and the
+      ties ``y == k + 0.5`` are exactly the rows sent to ``round``.
+    - For ``|y| >= 2^52`` every double is an integer: both return ``y``.
+    - NaN, ±∞ and null pass through both unchanged, so under ANSI mode
+      NaN and ±∞ raise the same cast error.
+
+    Before the cast only the sign of a zero can differ (``rint(-0.3)``
+    is -0.0, ``round`` gives 0.0); the two compare equal and the BIGINT
+    cast erases it. ``tests/test_exact.py`` checks all of this on an
+    adversarial set.
+    """
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(c * 100).cast("bigint")
+    return round_half_up(c * 100).cast("bigint")
 
 
 def csum(col: str | Column) -> Column:

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stellarsql_spark.catalog import load_table
+from stellarsql_spark.functions.exact import cents
 from stellarsql_spark.registry import register
 
 _B34_ORACLE = """
@@ -625,7 +626,7 @@ def b_fn_map_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").where(F.col("o_orderkey") % 29 == 0)
     base = o.select(
         "o_orderkey",
-        F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias("c"),
+        cents("o_totalprice").alias("c"),
     ).selectExpr("o_orderkey", f"{_MAP_HOF_ENTRY} AS m")
 
     def entry_str(expr: str) -> F.Column:
@@ -755,9 +756,7 @@ def b_fn_format(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Map-side only; the LIMIT-by-key filter pushes to the scan."""
     o = load_table(spark, sf_dir, "orders").where(F.col("o_orderkey") <= 200)
-    dollars = (F.round(100 * F.col("o_totalprice")).cast("bigint") / 100).cast(
-        "bigint"
-    )
+    dollars = (cents("o_totalprice") / 100).cast("bigint")
     # thousands-group the digit string: format_number on a BIGINT is
     # exact (no float rounding enters)
     return o.select(

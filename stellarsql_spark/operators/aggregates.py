@@ -1030,11 +1030,7 @@ def b_agg_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     trivially, and buys the form that still executes when
     |customers| is 1e10 and one task cannot hold them."""
     o = load_table(spark, sf_dir, "orders")
-    cust = o.groupBy("o_custkey").agg(
-        F.sum(F.round(100 * F.col("o_totalprice")).cast("bigint"))
-        .cast("bigint")
-        .alias("rev_c")
-    )
+    cust = o.groupBy("o_custkey").agg(F.sum(cents("o_totalprice")).alias("rev_c"))
     # Scalable global prefix (functions/prefix.py): the running sum and
     # rank over |customers| rows run npart-way parallel — same values
     # as the single-partition window, minus its one-task bottleneck.
@@ -1134,7 +1130,7 @@ def b_agg_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders")
     grp = o.select(
-        F.round(100 * F.col("o_totalprice")).cast("bigint").alias("v")
+        cents("o_totalprice").alias("v")
     ).groupBy("v").agg(F.count("*").cast("bigint").alias("cnt"))
     ranked = ordered_running(
         grp, order=[F.col("v")], sums={"cum": F.col("cnt")}
@@ -1234,7 +1230,7 @@ def b_agg_boxplot(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     grp = o.select(
         F.col("o_orderpriority").alias("pri"),
-        F.round(100 * F.col("o_totalprice")).cast("bigint").alias("v"),
+        cents("o_totalprice").alias("v"),
     ).groupBy("pri", "v").agg(F.count("*").cast("bigint").alias("cnt"))
     ranked = grp.select(
         "*",
@@ -1330,7 +1326,7 @@ def b_agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantities are integral in this corpus."""
     li = load_table(spark, sf_dir, "lineitem")
     grp = li.select(
-        F.round(100 * F.col("l_extendedprice")).cast("bigint").alias("v"),
+        cents("l_extendedprice").alias("v"),
         F.col("l_quantity").cast("bigint").alias("w"),
     ).groupBy("v").agg(F.sum("w").cast("bigint").alias("w"))
     from stellarsql_spark.functions.prefix import ordered_running
@@ -1575,7 +1571,7 @@ def b_agg_ttest_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.col("c_mktsegment").alias("seg"),
-            F.round(100 * F.col("o_totalprice")).cast("bigint").alias("v"),
+            cents("o_totalprice").alias("v"),
         )
     )
     dec = F.col("v").cast("decimal(38,0)")
@@ -1706,7 +1702,7 @@ def b_agg_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_nationkey").alias("nationkey"),
             F.col("o_custkey").alias("cust"),
         )
-        .agg(F.sum(F.round(100 * F.col("o_totalprice")).cast("bigint")).alias("v"))
+        .agg(F.sum(cents("o_totalprice")).alias("v"))
     )
     dec = F.col("v").cast("decimal(38,0)")
     return (
@@ -1785,7 +1781,7 @@ def b_agg_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     reps = F.explode(F.array(*[F.lit(r) for r in range(_BOOT_R)])).alias("r")
     draws = (
         o.select(
-            F.round(100 * F.col("o_totalprice")).cast("bigint").alias("v"),
+            cents("o_totalprice").alias("v"),
             F.col("o_orderkey").cast("string").alias("k"),
         )
         .select("v", "k", reps)

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stellarsql_spark.catalog import load_table
+from stellarsql_spark.functions.exact import cents, csum
 from stellarsql_spark.registry import register
 
 _FUNNEL_ORACLE = """
@@ -385,9 +386,7 @@ def b_ev_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max("ts").alias("last_ts"),
             F.count("*").alias("frequency"),
-            (F.sum(F.expr("CAST(ROUND(value * 100) AS BIGINT)")) / 100.0)
-            .cast("double")
-            .alias("monetary"),
+            csum("value").alias("monetary"),
         )
         .crossJoin(F.broadcast(max_ts))
         .select(
@@ -410,9 +409,7 @@ def b_ev_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return scored.groupBy("r_score", "f_score", "m_score").agg(
         F.count("*").alias("n_users"),
-        (F.sum(F.expr("CAST(ROUND(monetary * 100) AS BIGINT)")) / 100.0)
-        .cast("double")
-        .alias("segment_value"),
+        csum("monetary").alias("segment_value"),
     )
 
 
@@ -907,11 +904,7 @@ def b_ev_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(
             "cohort_mi", (mi - F.col("cohort_mi")).cast("bigint").alias("age")
         )
-        .agg(
-            F.sum(F.round(100 * F.col("o_totalprice")).cast("bigint"))
-            .cast("bigint")
-            .alias("rev_c")
-        )
+        .agg(F.sum(cents("o_totalprice")).alias("rev_c"))
     )
     w = (
         Window.partitionBy("cohort_mi")
@@ -1630,7 +1623,7 @@ def b_ev_decayed_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = e.where(F.col("event_type") == "purchase").select(
         "user_id",
         F.expr("unix_micros(ts) div 86400000000").cast("bigint").alias("d"),
-        F.round(100 * F.col("value")).cast("bigint").alias("v_c"),
+        cents("value").alias("v_c"),
     )
     anchor = ev.agg(F.max("d").alias("d_max"))
     w = ev.crossJoin(F.broadcast(anchor)).select(

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stellarsql_spark.catalog import load_table
+from stellarsql_spark.functions.exact import cents
 from stellarsql_spark.registry import register
 
 # The incoming batch: one update to an existing region, one new region.
@@ -224,9 +225,7 @@ def b_merge_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     def rollup(df: DataFrame) -> DataFrame:
         return df.groupBy("c_mktsegment").agg(
             F.count("*").cast("bigint").alias("n"),
-            F.sum(F.round(100 * F.col("o_totalprice")).cast("bigint"))
-            .cast("bigint")
-            .alias("rev_c"),
+            F.sum(cents("o_totalprice")).alias("rev_c"),
         )
 
     m = rollup(maintained)
@@ -291,7 +290,7 @@ def b_join_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = b_merge_scd2(spark, sf_dir)
     purch = ev.where(F.col("event_type") == "purchase").select(
         "user_id", F.col("ts").alias("p_ts"),
-        F.round(100 * F.col("value")).cast("bigint").alias("v_c"),
+        cents("value").alias("v_c"),
     )
     hits = purch.join(
         hist.select("user_id", "version", "valid_from", "valid_to"),

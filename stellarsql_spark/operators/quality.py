@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stellarsql_spark.catalog import load_table
+from stellarsql_spark.functions.exact import cents, csum
 from stellarsql_spark.registry import register
 
 _PROFILE_ORACLE = """
@@ -155,9 +156,7 @@ def b_quality_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(
             F.when(~F.col("o_orderstatus").isin("O", "F", "P"), 1).otherwise(0)
         ).alias("bad_status"),
-        (F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")) / 100.0)
-        .cast("double")
-        .alias("total_price"),
+        csum("o_totalprice").alias("total_price"),
     )
     observed.write.format("noop").mode("overwrite").save()  # the consuming action
     m = obs.get
@@ -500,7 +499,7 @@ def b_quality_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     o = load_table(spark, sf_dir, "orders").where(F.col("o_totalprice") > 0)
-    c = F.round(100 * F.col("o_totalprice")).cast("bigint")
+    c = cents("o_totalprice")
     digits = o.select(
         F.substring(c.cast("string"), 1, 1).cast("bigint").alias("d")
     )
@@ -581,7 +580,7 @@ def b_ev_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     a contract change, documented rather than silently widened."""
     o = load_table(spark, sf_dir, "orders")
     scored = o.select(
-        F.round(100 * F.col("o_totalprice")).cast("bigint").alias("score"),
+        cents("o_totalprice").alias("score"),
         F.col("o_orderpriority").isin("1-URGENT", "2-HIGH").cast("int").alias("pos"),
     )
     grp = scored.groupBy("score").agg(

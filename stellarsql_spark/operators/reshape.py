@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stellarsql_spark.catalog import load_table, register_views
-from stellarsql_spark.functions.exact import sql_dsum
+from stellarsql_spark.functions.exact import cents, sql_dsum
 from stellarsql_spark.registry import register
 
 _PIVOT_ORACLE = f"""
@@ -329,7 +329,7 @@ def b_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = F.md5(F.concat(F.lit("w42:"), F.col("o_orderkey").cast("string")))
     draw = o.select(
         "o_orderkey",
-        F.round(100 * F.col("o_totalprice")).cast("bigint").alias("w_c"),
+        cents("o_totalprice").alias("w_c"),
         (F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") + 1).alias("u32"),
     )
     q = F.col("w_c").cast("double") / F.col("u32")

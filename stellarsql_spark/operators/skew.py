@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stellarsql_spark.catalog import load_table
-from stellarsql_spark.functions.exact import sql_dsum
+from stellarsql_spark.functions.exact import cents, sql_dsum
 from stellarsql_spark.registry import register
 
 NSALT = 8
@@ -160,9 +160,9 @@ def b_join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact = (
         _read_table(s2, sf_dir, "events")
         .repartition(12)
-        .selectExpr(
-            f"{_SKEW_KEY.replace('VARCHAR', 'STRING')} AS k",
-            "CAST(ROUND(value * 100) AS BIGINT) AS v_cents",
+        .select(
+            F.expr(_SKEW_KEY.replace("VARCHAR", "STRING")).alias("k"),
+            cents("value").alias("v_cents"),
         )
     )
     dim = s2.createDataFrame([(k,) for k in _SKEW_DIM_KEYS], "dk string")

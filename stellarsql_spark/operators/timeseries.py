@@ -304,7 +304,7 @@ def b_ts_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", "ts").alias("bucket"),
         "event_type",
         "event_id",
-        (F.round(F.col("value") * 100)).cast("bigint").alias("cts"),
+        cents("value").alias("cts"),
     )
 
     def rollup(df: DataFrame) -> DataFrame:
@@ -381,10 +381,9 @@ def b_ts_calendar_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("d", "iso_dow", "is_weekend", "iso_week")
         .agg(
             F.count("event_id").alias("n_events"),
-            (
-                F.coalesce(F.sum(F.expr("CAST(ROUND(value * 100) AS BIGINT)")), F.lit(0))
-                / 100.0
-            ).cast("double").alias("day_value"),
+            (F.coalesce(F.sum(cents("value")), F.lit(0)) / 100.0)
+            .cast("double")
+            .alias("day_value"),
         )
         .select(
             F.col("d").cast("string").alias("day"),
@@ -497,7 +496,7 @@ def b_ts_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"))
+    ).agg(F.sum(cents("value")).alias("cents"))
     from pyspark.sql import Window
 
     w = Window.partitionBy("event_type").orderBy("day")
@@ -558,7 +557,7 @@ def b_ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the literal lag table."""
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents")
+        F.sum(cents("value")).alias("cents")
     )
     ks = ev.sparkSession.createDataFrame([(1,), (2,), (3,), (7,)], "k int")
     from pyspark.sql import Window
@@ -739,9 +738,7 @@ def b_ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        F.sum(F.round(100 * F.col("o_totalprice")).cast("bigint"))
-        .cast("bigint")
-        .alias("x_c")
+        F.sum(cents("o_totalprice")).alias("x_c")
     )
     tot = daily.agg(
         F.count("*").cast("bigint").alias("n_days"),
@@ -835,11 +832,7 @@ def b_ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "unix_micros(cast(o_orderdate as timestamp)) div 86400000000"
         ).cast("bigint").alias("epoch_d"),
-    ).agg(
-        F.sum(F.round(100 * F.col("o_totalprice")).cast("bigint"))
-        .cast("bigint")
-        .alias("x_c")
-    )
+    ).agg(F.sum(cents("o_totalprice")).alias("x_c"))
     w = Window.orderBy("day").rowsBetween(-3, 3)
     tr = daily.select(
         "day",
@@ -915,9 +908,7 @@ def b_ts_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("ym")
     ).agg(
-        F.sum(F.round(100 * F.col("o_totalprice")).cast("bigint"))
-        .cast("bigint")
-        .alias("rev_c"),
+        F.sum(cents("o_totalprice")).alias("rev_c"),
         F.count("*").cast("bigint").alias("n_orders"),
     )
     w = Window.orderBy("ym")
@@ -989,11 +980,7 @@ def b_ts_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
         .cast("bigint")
         .alias("mi")
-    ).agg(
-        F.sum(F.round(100 * F.col("o_totalprice")).cast("bigint"))
-        .cast("bigint")
-        .alias("rev_c")
-    )
+    ).agg(F.sum(cents("o_totalprice")).alias("rev_c"))
     n_months = monthly.count()
     a = monthly.select(F.col("mi").alias("i"), F.col("rev_c").alias("ra"))
     b = monthly.select(F.col("mi").alias("j"), F.col("rev_c").alias("rb"))
@@ -1152,9 +1139,7 @@ def b_ts_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        F.sum(F.round(100 * F.col("o_totalprice")).cast("bigint"))
-        .cast("bigint")
-        .alias("x_c")
+        F.sum(cents("o_totalprice")).alias("x_c")
     )
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     dd = daily.select(
@@ -1247,11 +1232,7 @@ def b_ts_stl_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("unix_micros(cast(o_orderdate as timestamp)) div 86400000000")
         .cast("bigint")
         .alias("epoch_d"),
-    ).agg(
-        F.sum(F.round(100 * F.col("o_totalprice")).cast("bigint"))
-        .cast("bigint")
-        .alias("x_c")
-    )
+    ).agg(F.sum(cents("o_totalprice")).alias("x_c"))
     w = Window.orderBy("day").rowsBetween(-3, 3)
     tr = daily.select(
         "epoch_d",
@@ -1539,7 +1520,7 @@ def b_ts_crosscorr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(
                 F.expr("unix_micros(ts) div 86400000000").cast("bigint").alias("d")
             )
-            .agg(F.sum(F.round(F.col("value") * 100).cast("bigint")).alias(out))
+            .agg(F.sum(cents("value")).alias(out))
         )
 
     dx, dy = daily("view", "x"), daily("purchase", "y")
@@ -1618,7 +1599,7 @@ def b_ts_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("unix_micros(cast(o_orderdate as timestamp)) div 86400000000")
         .cast("bigint")
         .alias("d")
-    ).agg(F.sum(F.round(100 * F.col("o_totalprice")).cast("bigint")).alias("rev_c"))
+    ).agg(F.sum(cents("o_totalprice")).alias("rev_c"))
     w = Window.orderBy("d").rowsBetween(-6, 0)
     med = F.expr("percentile(rev_c, 0.5)").over(w)
     return daily.select(
@@ -1703,11 +1684,7 @@ def b_ts_stl_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("unix_micros(cast(o_orderdate as timestamp)) div 86400000000")
         .cast("bigint")
         .alias("epoch_d")
-    ).agg(
-        F.sum(F.round(100 * F.col("o_totalprice")).cast("bigint"))
-        .cast("bigint")
-        .alias("x_c")
-    )
+    ).agg(F.sum(cents("o_totalprice")).alias("x_c"))
     w = Window.orderBy("epoch_d").rowsBetween(-3, 3)
     tr = daily.select(
         "epoch_d",
@@ -1803,7 +1780,7 @@ def b_ts_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "events")
-    cts = F.round(F.col("value") * 100).cast("bigint")
+    cts = cents("value")
     d = (
         e.where(F.col("event_type").isin("view", "purchase"))
         .groupBy(F.expr("unix_micros(ts) div 86400000000").cast("bigint").alias("d"))
@@ -1929,7 +1906,7 @@ def b_ts_stl_anomaly_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("epoch_d")
     ).agg(
         F.sum(
-            F.round(100 * F.col("o_totalprice")).cast("bigint").cast("decimal(38,0)")
+            cents("o_totalprice").cast("decimal(38,0)")
         ).alias("x_c")
     )
     w = Window.orderBy("epoch_d").rowsBetween(-3, 3)

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from stellarsql_spark.catalog import load_table
+from stellarsql_spark.functions.exact import cents
 from stellarsql_spark.registry import register
 
 _B23_ORACLE = """
@@ -383,7 +384,7 @@ def b_win_share_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = o.groupBy(
         F.col("o_orderpriority").alias("pri"),
         F.col("o_orderstatus").alias("status"),
-    ).agg(F.sum(F.round(100 * F.col("o_totalprice")).cast("bigint")).alias("v"))
+    ).agg(F.sum(cents("o_totalprice")).alias("v"))
     wp = Window.partitionBy("pri")
     wc = (
         Window.partitionBy("pri")

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from stellarsql_spark.catalog import load_table
+from stellarsql_spark.functions.exact import cents, csum
 from stellarsql_spark.registry import register
 
 SCRATCH_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch")
@@ -473,9 +474,7 @@ def b_layout_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_custkey")
         .agg(
             F.count("*").alias("n_orders"),
-            (
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")) / 100.0
-            ).cast("double").alias("spend"),
+            csum("o_totalprice").alias("spend"),
         )
     )
 
@@ -659,9 +658,7 @@ def b_layout_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.parquet(out)
     return back.groupBy("o_orderpriority").agg(
         F.count("*").alias("n_orders"),
-        (F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")) / 100.0)
-        .cast("double")
-        .alias("total_price"),
+        csum("o_totalprice").alias("total_price"),
     )
 
 
@@ -794,7 +791,7 @@ def b_layout_colstats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         "o_orderpriority",
         F.col("o_orderdate").cast("timestamp").cast("string").alias("o_orderdate_s"),
-        F.round(100 * F.col("o_totalprice")).cast("bigint").alias("o_totalprice_c"),
+        cents("o_totalprice").alias("o_totalprice_c"),
     )
     cols = [
         ("o_orderkey", "o_orderkey", True),

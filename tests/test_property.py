@@ -8,6 +8,7 @@ import duckdb
 import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 rows_strategy = st.lists(
     st.tuples(
@@ -182,6 +183,35 @@ def test_cents_sum_equals_decimal_sum_and_duckdb(spark, vals):
     ).fetchone()
     con.close()
     assert got.c == dc == dd  # and both engines agree bit-for-bit
+
+
+# cents() skips Spark's per-row BigDecimal round (rint, with round kept
+# for exact ties); it must still return what round returned on any
+# finite double, ties k + 0.5 and 2-dp money included.
+kernel_strategy = st.lists(
+    st.one_of(
+        st.floats(min_value=-1e16, max_value=1e16, allow_nan=False),
+        st.integers(min_value=-(2**51), max_value=2**51).map(lambda k: k + 0.5),
+        st.integers(min_value=-(10**11), max_value=10**11).map(lambda c: c / 100.0),
+    ),
+    min_size=1,
+    max_size=50,
+)
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
+@given(vals=kernel_strategy)
+def test_cents_kernel_matches_spark_round(spark, vals):
+    from stellarsql_spark.functions.exact import cents, round_half_up
+
+    sdf = spark.createDataFrame(pd.DataFrame({"x": vals}), schema="x double")
+    x = F.col("x")
+    rows = sdf.select(
+        F.round(x).eqNullSafe(round_half_up(x)).alias("same_x"),
+        F.round(x * 100).eqNullSafe(round_half_up(x * 100)).alias("same_d"),
+        F.round(x * 100).cast("bigint").eqNullSafe(cents("x")).alias("same_c"),
+    ).collect()
+    assert all(all(r) for r in rows), [v for v, r in zip(vals, rows) if not all(r)]
 
 
 # --- Round-8 second-half property tests ---------------------------------------
