@@ -500,11 +500,9 @@ TIERS = (
          _DEEP_KEYS + ("b_llm_dedup_incremental", "b_llm_dedup_incremental_bucketed"),
          5, _PART),
     # Skew-handling forms of one orders⋈lineitem rollup, sharing one
-    # oracle.  The blanket-salt b_join_salted is left out: its build-side
-    # replication measured 96.5 s at this tier (SCALE.md round-8).
+    # oracle.
     Tier("scale_probe_skew", "skew", 300,
-         ("b_join_skew_split", "b_join_salted_hot", "b_join_skew_bypass",
-          "b_join_skew_coldagg"), 7, _SKEW),
+         ("b_join_skew_split", "b_join_skew_bypass"), 7, _SKEW),
     # One tokenize + (doc, word) count shuffle: the plan every
     # text-index build shares.  An "eager" key, so builder+count is timed.
     Tier("scale_probe_retrieval", "retr", 300, ("b_llm_bm25",), 7, _FULL),
@@ -582,9 +580,7 @@ _SHORT = {
     "b_llm_cosine_topk": "cos",
     "b_llm_bm25": "bm25",
     "b_join_skew_split": "skSplit",
-    "b_join_salted_hot": "skSalt",
     "b_join_skew_bypass": "skByp",
-    "b_join_skew_coldagg": "skCold",
     "b_topk_per_group": "topk",
     "b_topk_per_group_bucketed": "topkB",
     "b_topk_per_group_served": "topkS",

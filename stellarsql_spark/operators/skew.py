@@ -1,15 +1,29 @@
-"""Skew-resilient join (SURVEY.md §4.2 "skew handling"): explicit key
-salting, the manual fallback when AQE's skew-join split isn't enough
-(e.g. one hot key inside a single shuffle block, or a streaming join
-where AQE doesn't apply).
+"""Skew-resilient joins (SURVEY.md §4.2 "skew handling").
 
-Construction: the probe side appends a deterministic salt in
-[0, NSALT) derived from a non-key column; the build side is exploded
-NSALT× so every (key, salt) pair still finds its match. The join key
-becomes (key, salt), spreading one hot key over NSALT shuffle
-partitions. Replication multiplies the build side NSALT× — use it on
-the small side only. Results are identical to the unsalted join, so
-the oracle is the plain SQL join.
+One query carries the family: orders⋈lineitem rolled up by
+o_orderstatus (row count + exact decimal revenue).  Every form is a
+physical re-partitioning of the same join, so all share one oracle,
+the plain SQL join (_SALTED_ORACLE, named for the family's first
+form).  The forms kept:
+
+- b_join_skew_split: the plain shuffle-hash join under AQE skew
+  splitting with tier-scaled thresholds — b_join_auto's lane for a
+  heavy-tailed key;
+- b_join_skew_bypass: the hot keys pre-aggregate map-side and meet a
+  broadcast, the cold remainder takes the plain join — the fastest
+  form under zipfian skew;
+- b_join_auto: runs the exact key audit, dispatches to plain, bypass
+  or aqe_split, and emits the verdict beside the rows (its oracle
+  certifies both).
+
+b_join_skew_aqe is the split rule's own demonstration on a synthetic
+hot key, with its own oracle.
+
+Blanket salting (C7), detect-then-salt (C155) and cold-lane eager
+aggregation (C256) were retired: a kept form beat each of them in
+every measured regime (sf0.1 uniform, 30× and 300× zipfian, one host;
+CHANGES.md).  A new form joins the family only if it beats a kept
+one in some measured regime.
 """
 
 from __future__ import annotations
@@ -21,8 +35,6 @@ from stellarsql_spark.catalog import load_table
 from stellarsql_spark.functions.exact import cents, sql_dsum
 from stellarsql_spark.registry import register
 
-NSALT = 8
-
 _SALTED_ORACLE = f"""
 SELECT o_orderstatus,
        COUNT(*) AS n_items,
@@ -32,31 +44,15 @@ GROUP BY o_orderstatus
 """
 
 
-@register("b_join_salted", oracle=_SALTED_ORACLE, tags=("join", "skew", "salt"))
-def b_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """orders⋈lineitem with an 8-way salted key. The salt is
-    pmod(hash(l_linenumber), 8) — deterministic, uniform, and
-    independent of the join key, so each original pair appears exactly
-    once in exactly one salt lane.
-
-    Measured at-depth negative (r8, 300× zipfian corpus): the blanket
-    NSALT× build-side replication costs 96.5 s where the hot-key-only
-    variant (b_join_salted_hot) takes ~7 s and AQE skew-split
-    (b_join_skew_split) sits at the shuffle floor — replicating a 45M-
-    row build side 8× costs far more than the straggler it cures.
-    Blanket salt remains the right tool only when the build side is
-    small or hot keys are unknowable (e.g. streaming); at batch depth
-    use the detect-then-salt or AQE forms."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    salts = F.array(*[F.lit(i) for i in range(NSALT)])
-    o_rep = o.withColumn("salt", F.explode(salts))
-    li_s = li.withColumn("salt", F.pmod(F.hash("l_linenumber"), F.lit(NSALT)))
+def _plain_rollup(li: DataFrame, o: DataFrame) -> DataFrame:
+    """The unmitigated form every kept lane reduces to: lineitem
+    probes a shuffle-hash build of orders, then the status rollup.
+    The hint skips the fact-side sort a sort-merge join would pay
+    (40.7 s → 6.7 s at 300×z, SCALE.md round-8)."""
+    li = li.select("l_orderkey", "l_extendedprice")
+    o = o.select("o_orderkey", "o_orderstatus")
     return (
-        li_s.join(
-            o_rep,
-            (li_s.l_orderkey == o_rep.o_orderkey) & (li_s.salt == o_rep.salt),
-        )
+        li.join(o.hint("shuffle_hash"), li.l_orderkey == o.o_orderkey)
         .groupBy("o_orderstatus")
         .agg(
             F.count("*").alias("n_items"),
@@ -114,8 +110,9 @@ GROUP BY LENGTH(f.k)
 
 @register("b_join_skew_aqe", oracle=_SKEW_AQE_ORACLE, tags=("join", "skew", "aqe"))
 def b_join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C101: AQE skew-join splitting — the AUTOMATIC layer above
-    b_join_salted's manual salt. The fact side is keyed so one key
+    """C101: AQE skew-join splitting on its own, with zero query
+    rewrite (the rule b_join_skew_split relies on at depth). The fact
+    side is keyed so one key
     holds ~90% of rows; a shuffle join on that key puts ~90% of the
     data in one task, the exact pathology that serializes a
     1000-executor cluster behind one straggler. With skew splitting
@@ -199,7 +196,8 @@ _SPLIT_CONFS = {
 @register("b_join_skew_split", oracle=_SALTED_ORACLE, tags=("join", "skew", "aqe"))
 def b_join_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C154: the zero-rewrite AQE skew-split form of the
-    orders⋈lineitem rollup — same result contract as b_join_salted.
+    orders⋈lineitem rollup (_plain_rollup under tier-scaled skew
+    confs) — b_join_auto's aqe_split lane.
 
     b_join_skew_aqe proves the split RULE fires (synthetic hot key,
     forced); this key is the shape you actually run at 100 TB: a
@@ -209,12 +207,11 @@ def b_join_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     `scale_probe_skew` block against the zipfian corpus
     (scale.py ensure_skewed_corpus: hot orderkey #1 carries ~18% of
     lineitem; AQEShuffleRead shows `skewed` on the fact side when it
-    runs there).  The shuffle_hash hint skips the 180M-row sort a
-    sort-merge join would pay (40.7 s → 6.7 s measured at 300×z).  On
-    un-skewed corpora the rule correctly stays idle and this is just
-    the plain join — one oracle covers every SF.  The post-join
-    aggregate groups by o_orderstatus (not the join key), so the join
-    output's partitioning is unconstrained and AQE is free to split."""
+    runs there).  On un-skewed corpora the rule correctly stays idle
+    and this is just the plain join — one oracle covers every SF.  The
+    post-join aggregate groups by o_orderstatus (not the join key), so
+    the join output's partitioning is unconstrained and AQE is free to
+    split."""
     s2 = spark.newSession()
     for k, v in _SPLIT_CONFS.items():
         s2.conf.set(k, v)
@@ -225,16 +222,7 @@ def b_join_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from stellarsql_spark.catalog import _read_table
 
-    o = _read_table(s2, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    li = _read_table(s2, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
-    return (
-        li.join(o.hint("shuffle_hash"), li.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count("*").alias("n_items"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("gross"),
-        )
-    )
+    return _plain_rollup(_read_table(s2, sf_dir, "lineitem"), _read_table(s2, sf_dir, "orders"))
 
 
 # Hot-key detection sample: cheap pre-pass fraction and the sampled
@@ -243,60 +231,6 @@ def b_join_skew_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HOT_SAMPLE = 0.02
 _HOT_MIN_SAMPLED = 50
 _HOT_TOP = 8
-
-
-@register("b_join_salted_hot", oracle=_SALTED_ORACLE, tags=("join", "skew", "salt"))
-def b_join_salted_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C155: detect-then-salt — salt ONLY the measured hot keys.
-
-    b_join_salted's blanket salt replicates the whole build side
-    NSALT×, which at depth costs more than the straggler it cures (a
-    45M-row orders side becomes 360M rows at the 300× tier).  The
-    production refinement is two-phase: a sampled count pre-pass
-    finds keys above a share threshold (here a 2% sample; at 100 TB
-    this is sketch/stats metadata you already have), then only rows
-    carrying those keys fan out across salt lanes — the build-side
-    blowup is |hot|×NSALT extra ROWS, not a full replica set.  Cold
-    rows ride salt lane 0 untouched.  Result-identical to the plain
-    join for ANY detected set (salting is a physical spreading), so
-    the oracle is the plain SQL — on uniform corpora the hot set is
-    empty and this degenerates to exactly the plain join."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    hot = [
-        r[0]
-        for r in li.sample(_HOT_SAMPLE, seed=7)
-        .groupBy("l_orderkey")
-        .count()
-        .where(F.col("count") >= _HOT_MIN_SAMPLED)
-        .orderBy(F.desc("count"))
-        .limit(_HOT_TOP)
-        .collect()
-    ]
-    if not hot:
-        joined = li.join(o, li.l_orderkey == o.o_orderkey)
-    else:
-        is_hot_li = F.col("l_orderkey").isin(hot)
-        li_s = li.withColumn(
-            "salt",
-            F.when(is_hot_li, F.pmod(F.hash("l_linenumber"), F.lit(NSALT))).otherwise(0),
-        )
-        is_hot_o = F.col("o_orderkey").isin(hot)
-        lanes = F.when(
-            is_hot_o, F.array(*[F.lit(i) for i in range(NSALT)])
-        ).otherwise(F.array(F.lit(0)))
-        o_rep = o.withColumn("salt", F.explode(lanes))
-        # shuffle_hash: the salted lanes even out partition sizes, but
-        # a sort-merge join would still sort the full fact side —
-        # measured 16.3 s SMJ vs ~7 s SHJ on the 300× zipfian corpus.
-        joined = li_s.join(
-            o_rep.hint("shuffle_hash"),
-            (li_s.l_orderkey == o_rep.o_orderkey) & (li_s.salt == o_rep.salt),
-        )
-    return joined.groupBy("o_orderstatus").agg(
-        F.count("*").alias("n_items"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("gross"),
-    )
 
 
 @register("b_join_skew_bypass", oracle=_SALTED_ORACLE, tags=("join", "skew", "broadcast"))
@@ -344,16 +278,9 @@ def b_join_skew_bypass(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(_HOT_TOP)
         .collect()
     ]
-    dec = F.col("l_extendedprice").cast("decimal(18,2)")
     if not hot:
-        return (
-            li.join(o.hint("shuffle_hash"), li.l_orderkey == o.o_orderkey)
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n_items"),
-                F.sum(dec).cast("double").alias("gross"),
-            )
-        )
+        return _plain_rollup(li, o)
+    dec = F.col("l_extendedprice").cast("decimal(18,2)")
     is_hot_li = F.col("l_orderkey").isin(hot)
     is_hot_o = F.col("o_orderkey").isin(hot)
     hot_pre = (
@@ -390,122 +317,12 @@ def b_join_skew_bypass(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("b_join_skew_coldagg", oracle=_SALTED_ORACLE, tags=("join", "skew", "eager-agg"))
-def b_join_skew_coldagg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C256: hot-key bypass + COLD-lane eager aggregation — the r9
-    VERDICT next-round #1 form, closing the skew family.
-
-    b_join_skew_bypass removed the hot lane's data-sized shuffle
-    (map-side collapse to ~|hot|x tasks partials + broadcast) but its
-    cold lane still pushed every uniform row through the exchange as a
-    raw (key, price) pair and aggregated only after the join.  This
-    form applies the hot lane's own move to the cold lane: aggregate
-    BY KEY first, join second —
-
-    - **cold lane**: repartition cold lineitem on l_orderkey, then a
-      FUSED partial+final aggregate to one (key, n, cents) row per
-      orderkey (~|orderkeys| rows, ~4x fewer than line items), then
-      the orders join probes the AGGREGATE, reusing the aggregate's
-      hash partitioning so only the slim orders side shuffles for the
-      join.  The repartition-first shape is b_join_inner's measured
-      lesson: with ~4 scattered line items per key a PRE-exchange
-      partial map reduces almost nothing (the zipfian corpus is
-      round-robin-replicated, so cold keys are spread across every
-      task) while paying a data-sized hash-map build per task;
-      post-exchange the collapse is total and the aggregate fuses
-      into the exchange-consumer stage.
-    - **hot lane**: unchanged from C255 — ~|hot| keys pre-aggregate
-      map-side and meet a broadcast of their ~|hot| orders rows.
-
-    MEASURED NEGATIVE (kept, like b_join_salted, so it isn't
-    re-tried): at 300x zipfian, min-of-3 fresh executions, the cold
-    pre-agg lane costs 6.72 s vs the bypass cold lane's 5.28 s — the
-    post-exchange hash aggregate over ~45M distinct keys costs more
-    than the 4x-smaller join probe saves.  The decomposition shows
-    why no cold-lane rewrite can close the family's residual: the
-    cold exchanges ALONE (repartition-by-key + drain, no join) cost
-    4.02 s (lineitem 2.67 + orders 1.35) against 0.65 s of scans and
-    ~0.6 s of probe+agg, while DuckDB's whole query on the same
-    parquet is ~1.34 s — a single-node shared-memory hash join pays
-    no shuffle materialization at all.  The residual is the
-    irreducible single-node shuffle tax; on a real cluster the same
-    exchange buys horizontal scaling DuckDB cannot (SCALE.md
-    round-10).  Result-identical to the plain join for ANY detected
-    hot set (SUM/COUNT distribute over the key partition), so the
-    shared _SALTED_ORACLE covers every corpus; with no detected hot
-    key it degenerates to the eager-agg join."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    hot = [
-        r[0]
-        for r in li.sample(_HOT_SAMPLE, seed=7)
-        .groupBy("l_orderkey")
-        .count()
-        .where(F.col("count") >= _HOT_MIN_SAMPLED)
-        .orderBy(F.desc("count"))
-        .limit(_HOT_TOP)
-        .collect()
-    ]
-    dec = F.col("l_extendedprice").cast("decimal(18,2)")
-
-    def agg_join_lane(li_side: DataFrame, o_side: DataFrame) -> DataFrame:
-        pre = (
-            li_side.select("l_orderkey", dec.alias("__px"))
-            .repartition(F.col("l_orderkey"))
-            .groupBy("l_orderkey")
-            .agg(F.count("*").alias("n_p"), F.sum("__px").alias("g_p"))
-        )
-        return (
-            pre.join(o_side.hint("shuffle_hash"), pre.l_orderkey == o_side.o_orderkey)
-            .groupBy("o_orderstatus")
-            .agg(
-                F.sum("n_p").alias("n_items"),
-                F.sum("g_p").cast("decimal(38,2)").alias("gross_d"),
-            )
-        )
-
-    if not hot:
-        lane = agg_join_lane(li, o.select("o_orderkey", "o_orderstatus"))
-        return lane.select(
-            "o_orderstatus",
-            F.col("n_items").cast("bigint").alias("n_items"),
-            F.col("gross_d").cast("double").alias("gross"),
-        )
-    is_hot_li = F.col("l_orderkey").isin(hot)
-    is_hot_o = F.col("o_orderkey").isin(hot)
-    hot_pre = (
-        li.where(is_hot_li)
-        .groupBy("l_orderkey")
-        .agg(F.count("*").alias("n_p"), F.sum(dec).alias("g_p"))
-    )
-    o_hot = o.where(is_hot_o).select("o_orderkey", "o_orderstatus")
-    hot_lane = (
-        hot_pre.join(F.broadcast(o_hot), hot_pre.l_orderkey == o_hot.o_orderkey)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.sum("n_p").alias("n_items"),
-            F.sum("g_p").cast("decimal(38,2)").alias("gross_d"),
-        )
-    )
-    cold_lane = agg_join_lane(
-        li.where(~is_hot_li), o.where(~is_hot_o).select("o_orderkey", "o_orderstatus")
-    )
-    return (
-        hot_lane.unionByName(cold_lane)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.sum("n_items").cast("bigint").alias("n_items"),
-            F.sum("gross_d").cast("double").alias("gross"),
-        )
-    )
-
-
 # --- Audit-driven strategy chooser (r10 VERDICT #7) --------------------------
 
 # C261 (b_quality_keyskew) computes the EXACT key distribution audit
 # that this family's sampled detector approximates.  This helper is
 # the documented decision table that turns the two shipped artifacts —
-# the audit and the five measured join forms — into one operating
+# the audit and the kept join forms — into one operating
 # procedure: run the audit once per (table, key), then pick the form
 # its verdict names.  Thresholds and rationale:
 #
@@ -518,9 +335,9 @@ def b_join_skew_coldagg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # |             |                                   | mitigation only adds  |
 # |             |                                   | cost (blanket salt and|
 # |             |                                   | cold-lane eager-agg   |
-# |             |                                   | are kept measured     |
-# |             |                                   | NEGATIVES, SCALE.md   |
-# |             |                                   | rounds 8/10)          |
+# |             |                                   | lost in every measured|
+# |             |                                   | regime and were       |
+# |             |                                   | retired, CHANGES.md)  |
 # | 'bypass'    | not plain AND top8_share ≥ 25%    | a bounded hot head    |
 # |             |                                   | owns the table — the  |
 # |             |                                   | hot lane pre-aggs map-|
@@ -554,8 +371,8 @@ def choose_join_strategy(
 
     ``audit_row``: a Row (or mapping) with b_quality_keyskew's columns
     — n_rows, max_n, top8_share_m (shares in millionths).  Returns
-    'plain' | 'bypass' | 'aqe_split', the registry keys' suffixes
-    (b_join_inner / b_join_skew_bypass / b_join_skew_aqe)."""
+    'plain' | 'bypass' | 'aqe_split', which b_join_auto runs as
+    _plain_rollup / b_join_skew_bypass / b_join_skew_split."""
     n_rows = int(audit_row["n_rows"])
     max_n = int(audit_row["max_n"])
     top8_share_m = int(audit_row["top8_share_m"])
@@ -625,9 +442,9 @@ def b_join_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract).
 
     Dispatch targets (all share _SALTED_ORACLE's result block):
-    - 'plain'     → direct shuffle-hash join + aggregate (no
-                    mitigation: the audit proved no partition can
-                    overflow, so any mitigation only adds cost);
+    - 'plain'     → _plain_rollup (no mitigation: the audit proved
+                    no partition can overflow, so any mitigation only
+                    adds cost);
     - 'bypass'    → b_join_skew_bypass (bounded hot head: pre-agg
                     map-side + broadcast, hot rows never shuffle);
     - 'aqe_split' → b_join_skew_split (heavy tail: AQE splits
@@ -670,18 +487,7 @@ def b_join_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     elif verdict == "aqe_split":
         lane = b_join_skew_split(spark, sf_dir)
     else:
-        o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-        lane = (
-            li.select("l_orderkey", "l_extendedprice")
-            .join(o.hint("shuffle_hash"), F.col("l_orderkey") == o.o_orderkey)
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n_items"),
-                F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("gross"),
-            )
-        )
+        lane = _plain_rollup(li, load_table(spark, sf_dir, "orders"))
     return lane.select(
         F.lit(verdict).alias("verdict"), "o_orderstatus", "n_items", "gross"
     )

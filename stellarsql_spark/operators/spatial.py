@@ -79,8 +79,8 @@ def b_geo_distance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: the grid cell IS the partition key — candidates
     co-locate by (cx, cy), the 9-offset expansion is a 9-row
     broadcast, and per-cell work is density-bounded (the skew story
-    for urban hot cells is the same salting/AQE playbook as
-    b_join_salted_hot). The haversine is evaluated ONLY on
+    for urban hot cells is the same hot-key bypass/AQE playbook as
+    b_join_skew_bypass). The haversine is evaluated ONLY on
     neighbor-cell candidates, never all pairs. The cell width is
     chosen ≥ radius at every latitude in the generated band (module
     docstring), so no qualifying pair can escape the 3×3

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stellarsql_spark.catalog import load_table
+from stellarsql_spark.catalog import load_table, table_bytes
 from stellarsql_spark.functions.exact import SQL_DISC_PRICE, cents, disc_price
 from stellarsql_spark.registry import register
 
@@ -49,10 +49,10 @@ LIMIT 10
 #   already tiny) → 'base';
 # - 233 MiB (30×): eager pre-agg WINS ~21% (the exchange + post-join
 #   groupBy collapse to one narrow pre-agg exchange) → 'preagg'.
-# The bar splits the unmeasured decade between the two points at the
-# binary boundary the session tuner already uses (128 MiB — the
-# tune_for_data_size small/mid cut): below it the measured loss side,
-# above it within 2× of the measured win side.  The shuffle_hash hint
+# The bar splits the unmeasured decade between the two points at a
+# power of two, 128 MiB (half of tune_for_data_size's 256 MiB
+# small/mid cut): below it the measured loss side, above it within 2×
+# of the measured win side.  The shuffle_hash hint
 # rides ONLY the base lane (VERDICT #7's tier gate): it was measured
 # at the AQE-off base tier, and the preagg lane reshapes the join
 # input entirely (the build side becomes the one-row-per-order
@@ -66,21 +66,6 @@ def choose_q3_strategy(lineitem_bytes: int, bar: int = Q3_PREAGG_BYTES) -> str:
     the data term flips it — the OPTIMIZATION_r14 §q3 crossover as a
     decision rule."""
     return "base" if lineitem_bytes < bar else "preagg"
-
-
-def _lineitem_bytes(sf_dir: str) -> int:
-    """On-disk parquet bytes of the lineitem table (file or dir)."""
-    import glob
-    import os
-
-    from stellarsql_spark.catalog import table_path
-
-    p = table_path(sf_dir, "lineitem")
-    if os.path.isdir(p):
-        return sum(
-            os.path.getsize(f) for f in glob.glob(os.path.join(p, "*.parquet"))
-        )
-    return os.path.getsize(p)
 
 
 def _q3(spark: SparkSession, sf_dir: str, strategy: str) -> DataFrame:
@@ -145,7 +130,7 @@ def b_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     above — the headline/oracle tiers (≤ sf0.1) stay on the measured
     base-optimal lane byte-identically, ≥128 MiB corpora get the
     depth-optimal lane, and both lanes are certified result-equal."""
-    return _q3(spark, sf_dir, choose_q3_strategy(_lineitem_bytes(sf_dir)))
+    return _q3(spark, sf_dir, choose_q3_strategy(table_bytes(sf_dir, "lineitem")))
 
 
 _Q5_ORACLE = f"""

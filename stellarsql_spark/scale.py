@@ -199,9 +199,9 @@ def ensure_scaled_corpus(
 #
 # The uniform replicator above preserves each base table's key
 # distribution, so orders⋈lineitem at every tier joins on DISJOINT
-# UNIFORM keys — the skew operators (b_join_salted, b_join_skew_aqe)
-# were only ever *correctness*-tested under skew, never *measured*
-# under it at depth.  This variant remaps a configurable share of
+# UNIFORM keys — the skew operators were only ever *correctness*-
+# tested under skew, never *measured* under it at depth.  This
+# variant remaps a configurable share of
 # lineitem's join key onto a few hot orderkeys with harmonic
 # (zipf s=1) weights: hot key #j carries share HOT_SHARE·(1/j)/H_n,
 # so the #1 key alone holds ~18% of all rows — the single-straggler

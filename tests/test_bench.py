@@ -1,7 +1,8 @@
 """bench.py: the host-fit rule that skips a depth tier whose corpus
-will not fit on disk, and the compact stdout line's size bound (the
-driver keeps only the last 2000 chars of stdout).  Only the corpus-dir
-check starts Spark."""
+will not fit on disk, the compact stdout line's size bound (the
+driver keeps only the last 2000 chars of stdout), and that every key
+the bench names is registered.  Only the corpus-dir check starts
+Spark."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import json
 import os
 
 import bench
+from stellarsql_spark.registry import all_specs
 
 SF_SMALL = "/root/testdata/sf0.001"
 
@@ -117,3 +119,12 @@ def test_compact_line_fits_with_every_tier_populated():
     for blk in out["scale"].values():
         assert blk["r"] and blk["ts"]   # ratios and the cut always survive
     assert "rps1" in out["stream"]
+
+
+def test_every_bench_key_is_registered():
+    """A key retired from the registry but still named by the bench
+    would otherwise fail only when its tier starts, deep into a run."""
+    named = set(bench.HEADLINE) | set(bench._SHORT)
+    for tier in bench.TIERS:
+        named |= set(tier.keys)
+    assert named - set(all_specs()) == set()

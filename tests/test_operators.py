@@ -153,19 +153,6 @@ def test_ivf_ann_recall_floor(spark, sf_dir):
     assert all(exact[k] == ivf[k] for k in shared)
 
 
-def test_salted_join_lane_uniformity(spark, sf_dir):
-    """Each original (order, lineitem) pair must land in exactly one
-    salt lane: salted row count == plain join row count."""
-    from stellarsql_spark.catalog import load_table as lt
-    from stellarsql_spark.operators.skew import b_join_salted
-
-    o = lt(spark, sf_dir, "orders")
-    li = lt(spark, sf_dir, "lineitem")
-    plain = o.join(li, o.o_orderkey == li.l_orderkey).count()
-    salted_total = b_join_salted(spark, sf_dir).agg(F.sum("n_items")).collect()[0][0]
-    assert salted_total == plain
-
-
 def test_pack_chunks_partition_every_doc(spark, sf_dir):
     """b_llm_pack: chunks partition the corpus — doc counts add up and
     chunk ids are contiguous from 0 within each source."""

@@ -137,16 +137,6 @@ def test_tpch_q18_semi_join(spark, sf_dir):
     assert "LeftSemi" in plan, plan
 
 
-def test_salted_join_spreads_key(spark, sf_dir):
-    """The salted join must shuffle on the composite (key, salt) —
-    visible as hashpartitioning on both columns."""
-    from stellarsql_spark.operators.skew import b_join_salted
-
-    plan = physical_plan(b_join_salted(spark, sf_dir))
-    assert "salt" in plan, plan
-    assert "CartesianProduct" not in plan
-
-
 def test_sql_hints_bind_join_strategies(spark, sf_dir):
     """The BROADCAST hint must produce a BroadcastHashJoin for the
     nation dim and the MERGE hint a SortMergeJoin for the fact side —

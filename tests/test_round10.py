@@ -1,5 +1,6 @@
-"""Round-10 tests: skew cold-lane eager-agg form, prefix hardening,
-and the served groupby lineage."""
+"""Round-10 tests: prefix hardening, the served groupby lineage, the
+wide-moment keys, the 1part plan gate, the key-skew audit and the
+multi-batch stream run."""
 
 from __future__ import annotations
 
@@ -9,98 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
-
-
-class TestSkewColdagg:
-    @pytest.fixture(scope="class")
-    def skewed_dir(self, tmp_path_factory):
-        """Same mini corpus as TestSkewBypass: orderkey 0 holds 30k of
-        ~34k lineitem rows, far above the sampled detector's bar."""
-        import numpy as np
-        import pandas as pd
-
-        d = tmp_path_factory.mktemp("skewmini10")
-        n_cold_keys, cold_mult, n_hot = 199, 20, 30_000
-        orders = pd.DataFrame(
-            {
-                "o_orderkey": np.arange(n_cold_keys + 1, dtype=np.int64),
-                "o_orderstatus": [
-                    ("F", "O", "P")[i % 3] for i in range(n_cold_keys + 1)
-                ],
-            }
-        )
-        keys = np.concatenate(
-            [
-                np.zeros(n_hot, dtype=np.int64),
-                np.repeat(np.arange(1, n_cold_keys + 1, dtype=np.int64), cold_mult),
-            ]
-        )
-        li = pd.DataFrame(
-            {
-                "l_orderkey": keys,
-                "l_linenumber": (np.arange(len(keys)) % 7 + 1).astype(np.int32),
-                "l_extendedprice": np.round(
-                    (np.arange(len(keys)) % 9973) * 1.01 + 1.0, 2
-                ),
-            }
-        )
-        orders.to_parquet(os.path.join(d, "orders.parquet"))
-        li.to_parquet(os.path.join(d, "lineitem.parquet"))
-        return str(d)
-
-    def test_hot_path_fires_and_matches_plain_join(self, spark, skewed_dir):
-        """Detection finds the hot key, the hot lane's broadcast join
-        runs, and the result equals the plain shuffle join exactly —
-        the cold lane's pre-aggregation must not change any value."""
-        from stellarsql_spark.catalog import load_table
-        from stellarsql_spark.operators.skew import b_join_skew_coldagg
-
-        df = b_join_skew_coldagg(spark, skewed_dir)
-        rows = sorted(df.collect())
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" in plan  # the hot lane really ran
-
-        o = load_table(spark, skewed_dir, "orders")
-        li = load_table(spark, skewed_dir, "lineitem")
-        plain = sorted(
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n_items"),
-                F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("gross"),
-            )
-            .collect()
-        )
-        assert [tuple(r) for r in rows] == [tuple(r) for r in plain]
-
-    def test_uniform_corpus_degenerates_to_single_lane(self, spark):
-        """On the uniform tiny corpus no hot key clears the sampled
-        bar, so the form is one eager-agg join — no broadcast lane,
-        no union — and still value-identical to the plain join."""
-        from stellarsql_spark.catalog import load_table
-        from stellarsql_spark.operators.skew import b_join_skew_coldagg
-
-        df = b_join_skew_coldagg(spark, SF)
-        rows = sorted(df.collect())
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Union" not in plan
-
-        o = load_table(spark, SF, "orders")
-        li = load_table(spark, SF, "lineitem")
-        plain = sorted(
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count("*").alias("n_items"),
-                F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("gross"),
-            )
-            .collect()
-        )
-        assert [tuple(r) for r in rows] == [tuple(r) for r in plain]
 
 
 class TestPrefixHardening:

@@ -30,14 +30,11 @@ class TestQ3Chooser:
         far below the 128 MiB bar, so the registered key keeps the
         measured base-optimal plan byte-identically at every tier the
         driver touches (the r14 A/B showed preagg LOSES ~45% there)."""
-        from stellarsql_spark.operators.tpch import (
-            Q3_PREAGG_BYTES,
-            _lineitem_bytes,
-            choose_q3_strategy,
-        )
+        from stellarsql_spark.catalog import table_bytes
+        from stellarsql_spark.operators.tpch import Q3_PREAGG_BYTES, choose_q3_strategy
 
         for d in (SF_SMALL, SF_MED, SF_BASE):
-            n = _lineitem_bytes(d)
+            n = table_bytes(d, "lineitem")
             assert 0 < n < Q3_PREAGG_BYTES
             assert choose_q3_strategy(n) == "base"
 

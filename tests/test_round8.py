@@ -251,17 +251,23 @@ class TestAdversarialCodecs:
 
 class TestSkewForms:
     def test_three_forms_agree(self, spark):
-        """Skew handling is physical spreading — all three forms (AQE
-        split, hot-only salt, blanket salt) must be row-identical."""
+        """Skew handling is physical spreading — the kept forms (AQE
+        split, hot-key bypass, and the audit-driven chooser's result
+        columns) must be row-identical."""
         from stellarsql_spark.operators.skew import (
-            b_join_salted,
-            b_join_salted_hot,
+            b_join_auto,
+            b_join_skew_bypass,
             b_join_skew_split,
         )
 
-        a = {tuple(r) for r in b_join_salted(spark, SF_MED).collect()}
-        b = {tuple(r) for r in b_join_salted_hot(spark, SF_MED).collect()}
-        c = {tuple(r) for r in b_join_skew_split(spark, SF_MED).collect()}
+        a = {tuple(r) for r in b_join_skew_split(spark, SF_MED).collect()}
+        b = {tuple(r) for r in b_join_skew_bypass(spark, SF_MED).collect()}
+        c = {
+            tuple(r)
+            for r in b_join_auto(spark, SF_MED)
+            .select("o_orderstatus", "n_items", "gross")
+            .collect()
+        }
         assert a == b == c and len(a) > 0
 
     def test_zipfian_corpus_construction(self, spark, tmp_path):
