@@ -11,6 +11,11 @@ Scale notes (100 TB / 1000-executor design intent):
 - ``spark.sql.shuffle.partitions`` is a *local* default (≈ cores);
   on a real cluster AQE's coalescing makes the initial number a cap,
   so a cluster deploy would raise it to 2-3× total cores.
+  ``tune_for_data_size`` resizes it per dataset; inputs under 8 MiB
+  get one partition. A stateful stream fixes its state-partition
+  count from this conf when its checkpoint is created, and every
+  state partition costs a task, a state delta and a sink file per
+  micro-batch.
 - Session timezone pinned to UTC so timestamp semantics match the
   DuckDB oracle (UTC-naive) and are cluster-invariant.
 - Streaming checkpoints go through Spark's FileSystem-based checkpoint
@@ -27,6 +32,8 @@ from pyspark.sql import SparkSession
 
 # local[N] defaults to the CPUs this process may run on.
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+# the directory holding the stellarsql_spark package
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "stellarsql_spark", cpus: int | None = None) -> SparkSession:
@@ -58,6 +65,15 @@ def get_spark(app_name: str = "stellarsql_spark", cpus: int | None = None) -> Sp
             "spark.sql.streaming.checkpointFileManagerClass",
             "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
         )
+        # Python workers fork from worker_daemon, which keeps Python
+        # 3.11's zipimporters from re-reading pyspark.zip and the
+        # spark-core jar on every task's importlib.invalidate_caches():
+        # about 220 ms of worker CPU (140-280 ms on a 4-core host)
+        # before each Python task's function.
+        # The worker path carries the repo root so the daemon (and the
+        # engine's UDF modules) import from any working directory.
+        .config("spark.python.daemon.module", "stellarsql_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _REPO_ROOT)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("WARN")
@@ -68,10 +84,17 @@ def tune_for_data_size(spark: SparkSession, sf_dir: str, cpus: int | None = None
     """Size shuffle parallelism to the actual input volume.
 
     The engine rule (applied per dataset, all runtime-settable confs):
-    - tiny inputs (< ~256 MiB): a handful of shuffle partitions and
-      AQE off — task-scheduling and stage-re-optimization latency
-      dominate sub-second queries, measured ~30% of wall-clock at
-      sf0.1;
+    - tiny inputs (< ~256 MiB): a handful of shuffle partitions
+      (``min(cpus, 8)``) and AQE off — task-scheduling and
+      stage-re-optimization latency dominate sub-second queries,
+      measured ~30% of wall-clock at sf0.1. Inputs under 8 MiB get
+      one partition: per-task fixed costs set their latency, not the
+      data. A stream started after this call fixes its state width
+      from it when its checkpoint is created, so perfbench's 6.25 MiB
+      ``stream_ingest`` directory runs one state task per micro-batch
+      instead of four (one task binary to deserialize, one state delta
+      to commit, at most one sink file). The perfbench sf0.1 corpus
+      (16.69 MiB) keeps ``min(cpus, 8)``;
     - mid-size inputs (256 – 768 MiB): shuffle width grows with the
       data (bytes/32 MiB, still AQE-off latency regime) — measured at
       the 100× probe (~1 GiB), 8 partitions leave the exchange-heavy
@@ -97,7 +120,8 @@ def tune_for_data_size(spark: SparkSession, sf_dir: str, cpus: int | None = None
         for p in glob.glob(os.path.join(sf_dir, pattern))
     )
     if nbytes < 256 << 20:
-        spark.conf.set("spark.sql.shuffle.partitions", str(min(cpus, 8)))
+        width = 1 if nbytes < 8 << 20 else min(cpus, 8)
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
         spark.conf.set("spark.sql.adaptive.enabled", "false")
     elif nbytes < 768 << 20:
         width = min(2 * cpus, max(8, nbytes // (32 << 20)))

@@ -87,11 +87,20 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Measured on 4 cores against 1 and 32: the one-batch sf0.001
+# tumbling drain ran 546-822 ms warm at 4, 423-737 at 1, 1338-1686 at
+# 32; the 20k rows/s socket drain kept up at 1 and 4 and fell behind
+# at 32. Over the b_stream_* keys at sf0.1, 1 partition left the
+# Python state keys (applyInPandasWithState, transformWithState)
+# about twice as slow as 4, which outweighed its gains elsewhere.
+STREAM_SHUFFLE_PARTITIONS = 4
+
+
 @contextmanager
 def stream_shuffle_partitions(spark: SparkSession):
-    """Pin ``spark.sql.shuffle.partitions`` to 32 for the streaming
-    queries started inside the block, then restore the caller's value
-    (or unset it).
+    """Pin ``spark.sql.shuffle.partitions`` to
+    ``STREAM_SHUFFLE_PARTITIONS`` for the streaming queries started
+    inside the block, then restore the caller's value (or unset it).
 
     The state-store partition count is fixed by this conf when a
     checkpoint is first created, so it is pinned here rather than
@@ -99,11 +108,13 @@ def stream_shuffle_partitions(spark: SparkSession):
     ``tune_for_data_size`` resizes it per corpus, and a vanilla
     session (the driver harness's) carries 200, which made a one-batch
     sf0.001 drain take 4.3-4.5 s against 1.1-1.6 s at 32 (4 cores).
-    Restoring it keeps batch plans built later from inheriting a
-    streaming-sized shuffle count (plan shapes must not depend on
-    whether a streaming key ran first in the session)."""
+    Every stateful stream the engine starts itself goes through this
+    block, so its width does not depend on what ran earlier in the
+    session. Restoring it keeps batch plans built later from
+    inheriting a streaming-sized shuffle count (plan shapes must not
+    depend on whether a streaming key ran first in the session)."""
     prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     try:
         yield
     finally:
@@ -445,6 +456,56 @@ def rate_stream(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
     )
 
 
+def _drain_windowed(
+    src: DataFrame, window, watermark, prefix, trigger_ms, min_batches, timeout_s, on_stop=None
+) -> list[dict]:
+    """Run the watermarked tumbling count/sum of ``src`` per event type
+    in update mode into a memory sink on a processing-time trigger,
+    inside ``stream_shuffle_partitions``, until it has run
+    ``min_batches`` non-empty micro-batches or ``timeout_s`` passed;
+    return each non-empty batch's ops metrics. ``on_stop`` runs just
+    before the query stops."""
+    import time
+
+    agg = (
+        src.withWatermark("ts", watermark)
+        .groupBy(F.window("ts", window), "event_type")
+        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
+    )
+    with stream_shuffle_partitions(src.sparkSession):
+        q = (
+            agg.writeStream.outputMode("update")
+            .format("memory")
+            .queryName(f"{prefix}_{uuid.uuid4().hex[:12]}")
+            .trigger(processingTime=f"{trigger_ms} milliseconds")
+            .start()
+        )
+        try:
+            deadline = time.time() + timeout_s
+            while time.time() < deadline:
+                nonempty = [p for p in q.recentProgress if p["numInputRows"] > 0]
+                if len(nonempty) >= min_batches:
+                    break
+                time.sleep(0.25)
+            progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        finally:
+            if on_stop is not None:
+                on_stop()
+            q.stop()
+    return [
+        {
+            "batch_id": p["batchId"],
+            "input_rows": p["numInputRows"],
+            "duration_ms": p["batchDuration"],
+            "state_rows": sum(
+                op["numRowsTotal"] for op in p.get("stateOperators", [])
+            ),
+            "trigger_ms": trigger_ms,
+        }
+        for p in progress
+    ]
+
+
 def sustained_rate_drain(
     spark: SparkSession,
     rows_per_second: int = 5000,
@@ -476,45 +537,10 @@ def sustained_rate_drain(
     (socket_stream's note).  Uses update mode + processing-time
     trigger — the perpetual-query deployment shape, unlike the
     processAllAvailable() drains used for result parity."""
-    import time
-    import uuid as _uuid
-
-    agg = (
-        rate_stream(spark, rows_per_second)
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
+    return _drain_windowed(
+        rate_stream(spark, rows_per_second), window, watermark, "rate_drain",
+        trigger_ms, min_batches, timeout_s,
     )
-    name = f"rate_drain_{_uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(processingTime=f"{trigger_ms} milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + timeout_s
-        while time.time() < deadline:
-            nonempty = [p for p in q.recentProgress if p["numInputRows"] > 0]
-            if len(nonempty) >= min_batches:
-                break
-            time.sleep(0.25)
-        progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    finally:
-        q.stop()
-    return [
-        {
-            "batch_id": p["batchId"],
-            "input_rows": p["numInputRows"],
-            "duration_ms": p["batchDuration"],
-            "state_rows": sum(
-                op["numRowsTotal"] for op in p.get("stateOperators", [])
-            ),
-            "trigger_ms": trigger_ms,
-        }
-        for p in progress
-    ]
 
 
 def sustained_socket_drain(
@@ -555,7 +581,6 @@ def sustained_socket_drain(
     import socket as pysocket
     import threading
     import time
-    import uuid as _uuid
 
     base_us = 1_700_000_000_000_000
     etypes = ("view", "click", "purchase")
@@ -605,41 +630,10 @@ def sustained_socket_drain(
     if not ready.wait(timeout=10) or not ports:
         return []  # feeder failed to bind; caller treats [] as skip
 
-    agg = (
-        socket_stream(spark, "127.0.0.1", ports[0])
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-    )
-    name = f"socket_drain_{_uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(processingTime=f"{trigger_ms} milliseconds")
-        .start()
-    )
     try:
-        deadline = time.time() + timeout_s
-        while time.time() < deadline:
-            nonempty = [p for p in q.recentProgress if p["numInputRows"] > 0]
-            if len(nonempty) >= min_batches:
-                break
-            time.sleep(0.25)
-        progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        return _drain_windowed(
+            socket_stream(spark, "127.0.0.1", ports[0]), window, watermark, "socket_drain",
+            trigger_ms, min_batches, timeout_s, done.set,
+        )
     finally:
-        done.set()
-        q.stop()
-    feeder.join(timeout=10)
-    return [
-        {
-            "batch_id": p["batchId"],
-            "input_rows": p["numInputRows"],
-            "duration_ms": p["batchDuration"],
-            "state_rows": sum(
-                op["numRowsTotal"] for op in p.get("stateOperators", [])
-            ),
-            "trigger_ms": trigger_ms,
-        }
-        for p in progress
-    ]
+        feeder.join(timeout=10)

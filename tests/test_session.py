@@ -34,8 +34,12 @@ def _sparse(path, nbytes):
 
 # (input bytes, cpus, shuffle partitions, AQE)
 TIERS = [
-    (1 * MIB, 4, "4", "false"),
-    (1 * MIB, 32, "8", "false"),
+    (1 * MIB, 4, "1", "false"),
+    (1 * MIB, 32, "1", "false"),
+    (8 * MIB - 1, 4, "1", "false"),
+    (8 * MIB - 1, 32, "1", "false"),
+    (8 * MIB, 4, "4", "false"),
+    (8 * MIB, 32, "8", "false"),
     (256 * MIB - 1, 4, "4", "false"),
     (256 * MIB - 1, 32, "8", "false"),
     (256 * MIB, 4, "8", "false"),
@@ -71,6 +75,6 @@ def test_only_parquet_files_count(tmp_path):
     spark = _Session()
     tune_for_data_size(spark, str(tmp_path), cpus=4)
     assert dict(spark.conf.calls) == {
-        "spark.sql.shuffle.partitions": "4",
+        "spark.sql.shuffle.partitions": "1",
         "spark.sql.adaptive.enabled": "false",
     }

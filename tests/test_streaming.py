@@ -142,15 +142,11 @@ def test_engine_checkpoints_use_filesystem_manager(spark, tmp_path):
     assert spark.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "true"
 
 
-def test_watermarked_parquet_sink_checkpoint(spark, sf_dir, tmp_path):
-    """Three event files, one per micro-batch, through the watermarked
-    hourly window into a checkpointed parquet sink: the sink equals
-    DuckDB's aggregate over the closed windows, and the checkpoint
-    holds every log and integrity file Spark writes on this path."""
+def _write_event_files(sf_dir, src):
+    """Split the corpus's events, sorted by ``ts``, into three parquet
+    files; returns the sorted events."""
     import time
-    from datetime import datetime
 
-    import duckdb
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -158,7 +154,6 @@ def test_watermarked_parquet_sink_checkpoint(spark, sf_dir, tmp_path):
 
     events = pq.read_table(table_path(sf_dir, "events"))
     events = events.take(pc.sort_indices(events, [("ts", "ascending")]))
-    src = tmp_path / "src"
     src.mkdir()
     third = -(-events.num_rows // 3)
     mtime = time.time() - 60
@@ -166,8 +161,19 @@ def test_watermarked_parquet_sink_checkpoint(spark, sf_dir, tmp_path):
         f = src / f"part-{i}.parquet"
         pq.write_table(events.slice(i * third, third), f)
         os.utime(f, (mtime + i, mtime + i))  # source order is mtime order
+    return events
 
-    sink, ckpt = tmp_path / "sink", tmp_path / "ckpt"
+
+def _drain_watermarked_sink(spark, events, src, sink, ckpt):
+    """One file per micro-batch through the watermarked hourly window
+    into a checkpointed parquet sink; asserts the sink equals DuckDB's
+    aggregate over the closed windows and returns the progress rows."""
+    import time
+    from datetime import datetime
+
+    import duckdb
+    import pyarrow.compute as pc
+
     stream = runtime.events_stream_from_dir(spark, str(src), max_files_per_trigger=1)
     q = (
         tumbling_hourly(stream.withWatermark("ts", "2 hours"))
@@ -188,6 +194,7 @@ def test_watermarked_parquet_sink_checkpoint(spark, sf_dir, tmp_path):
             if wm and datetime.fromisoformat(wm.replace("Z", "+00:00")).timestamp() * 1000 >= final_wm_ms:
                 break
             time.sleep(0.1)
+        progress = q.recentProgress
     finally:
         q.stop()
 
@@ -205,6 +212,17 @@ def test_watermarked_parquet_sink_checkpoint(spark, sf_dir, tmp_path):
     con.close()
     assert len(expected) > 0
     assert got == expected
+    return progress
+
+
+def test_watermarked_parquet_sink_checkpoint(spark, sf_dir, tmp_path):
+    """Three event files, one per micro-batch, through the watermarked
+    hourly window into a checkpointed parquet sink: the sink equals
+    DuckDB's aggregate over the closed windows, and the checkpoint
+    holds every log and integrity file Spark writes on this path."""
+    src, sink, ckpt = tmp_path / "src", tmp_path / "sink", tmp_path / "ckpt"
+    events = _write_event_files(sf_dir, src)
+    _drain_watermarked_sink(spark, events, src, sink, ckpt)
 
     def tree(d):
         return {p.relative_to(d).as_posix() for p in d.rglob("*") if p.is_file()}
@@ -220,6 +238,28 @@ def test_watermarked_parquet_sink_checkpoint(spark, sf_dir, tmp_path):
         assert n + ".crc" in files  # Spark's checkpoint checksum
         assert f"{d}/.{f}.crc" in files  # Hadoop's sidecar of N.delta
     assert "_spark_metadata/0" in tree(sink)
+
+
+def test_small_input_stream_runs_one_state_partition(spark, sf_dir, tmp_path):
+    """``tune_for_data_size`` gives a sub-8 MiB input directory one
+    shuffle partition, and a stream whose checkpoint is created under
+    it runs one state partition per micro-batch, with the same sink."""
+    from stellarsql_spark.session import tune_for_data_size
+
+    src = tmp_path / "src"
+    events = _write_event_files(sf_dir, src)
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        tune_for_data_size(spark, str(src))
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
+        progress = _drain_watermarked_sink(spark, events, src, tmp_path / "sink", tmp_path / "ckpt")
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    states = [p["stateOperators"][0] for p in progress if p["numInputRows"] > 0]
+    assert len(states) == 3
+    assert all(s["numShufflePartitions"] == 1 for s in states), states
 
 
 def _batch_event_counts(spark, sf_dir):
